@@ -12,8 +12,11 @@ Scale design:
 - SimHash: one groupBy builds 64-bit fingerprints; near-dup blocking is
   a 16-bit-chunk equi-join (4 chunks => Hamming distance <= 3 guaranteed
   to collide in >= 1 chunk by pigeonhole).
-- n-gram Jaccard: exact pairwise within blocks only (lang here); at
-  100 TB you run MinHash first and reserve this for verification.
+- exact n-gram Jaccard / containment: one inverted shingle index at
+  every block size — a (block, shingle) postings self-join counts
+  |A∩B| for pairs that share a shingle, so work is Σ C(df, 2), linear
+  while document frequency is bounded; the invertedIndexMaxDf conf
+  raises when a corpus breaks that bound.
 """
 
 from __future__ import annotations
@@ -153,10 +156,9 @@ def _jaccard_verify(
       (groupBy on the pair key): predicates do not push through
       aggregates except on grouping keys, so the exact jaccard is
       computed exactly once per pair in the partial-aggregate stage and
-      the filter stays a Filter. Candidate streams are distinct on the
-      pair key at every call site (salted pair joins meet each pair
-      exactly once; LSH candidates are .distinct()), so the aggregate
-      is row-preserving and F.first is deterministic. The added
+      the filter stays a Filter. The MinHash candidate stream is
+      .distinct() on the pair key, so the aggregate is row-preserving
+      and F.first is deterministic. The added
       exchange ships (id_a, id_b, jaccard) — 24 B/row vs the ~430 B/row
       array payload already flowing into the join.
 
@@ -193,64 +195,6 @@ def _jaccard_verify(
         .agg(F.first(jac).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def _containment_verify(
-    pairs: DataFrame,
-    sa: str,
-    sb: str,
-    threshold: float,
-    id_cols: tuple[str, str] = ("id_a", "id_b"),
-) -> DataFrame:
-    """Containment twin of :func:`_jaccard_verify` (same aging-resistant
-    shape; see there for the full rationale): emits both direction
-    scores per pair, keeping C(A->B) >= t OR C(B->A) >= t.
-
-    Guard: max(i/a, i/b) = i/min(a,b) >= t  <=>  i >= t*min(a,b), one
-    intersect occurrence with +1e-9 superset slack; the exact OR of
-    double divisions runs above the aggregate barrier.
-    """
-    inter = F.size(F.array_intersect(sa, sb))
-    c_ab = inter.cast("double") / F.size(sa).cast("double")
-    c_ba = inter.cast("double") / F.size(sb).cast("double")
-    guard = (
-        inter.cast("double") + F.lit(1e-9)
-        >= F.lit(threshold) * F.least(F.size(sa), F.size(sb)).cast("double")
-    )
-    return (
-        pairs.filter(guard)
-        .groupBy(*id_cols)
-        .agg(
-            F.first(c_ab).alias("containment_ab"),
-            F.first(c_ba).alias("containment_ba"),
-        )
-        .filter(
-            (F.col("containment_ab") >= threshold)
-            | (F.col("containment_ba") >= threshold)
-        )
-    )
-
-
-def _hashed_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, s) -> (doc_id, s) with the shingle STRING array replaced
-    by its xxhash64 int64 array, for the exact-verify fetch (r7).
-
-    The verify join ships each candidate pair both docs' shingle sets;
-    on boilerplate-heavy routed blocks the candidate count is large and
-    the string arrays (~20 B/shingle + offsets) dominated the exchange
-    — the sf10 decade filled 77 GB of shuffle disk on exactly this
-    payload. Hashing each shingle to one int64 cuts the per-pair
-    payload ~3x while preserving |A∩B| and |A| exactly up to xxhash64
-    collisions (expected collisions ≈ pairs·|A|²/2^64 — zero at any
-    realistic corpus; a collision could only ever NUDGE one Jaccard by
-    1/|A∪B|). Distinctness is preserved (arrays are array_distinct'ed
-    strings; distinct strings hash to distinct int64s w.h.p.), and the
-    shuffle_hash hint stays: the payload is smaller but still
-    deserializes far above its compressed-scan estimate, so Catalyst
-    must never broadcast it."""
-    return sh.select(
-        "doc_id", F.transform("s", lambda x: F.xxhash64(x)).alias("s")
-    ).hint("shuffle_hash")
 
 
 #: Conf key: per-(band_idx, band_hash) bucket row ceiling above which
@@ -610,14 +554,14 @@ def minhash_lsh_pairs(
     # relation. shuffle_hash: doc_id is high-cardinality, so the build
     # side per partition is corpus/shuffle-partitions — bounded at any
     # scale, no sort of the array payload. The arrays are the int64
-    # `base` hashes (the `_hashed_sets` transform, now computed in the
-    # shared base projection so the fetch sides reuse one exchange).
+    # `base` hashes: |A∩B| and |A| are exact up to xxhash64 collisions
+    # (see _inverted_intersections), at ~1/3 of the string payload, and
+    # both fetch sides reuse one exchange of the shared projection.
     sets = base.select("doc_id", "s").hint("shuffle_hash")
     if band_bucket_cap and band_bucket_cap > 0:
         # One linear aggregate finds hot buckets (tiny by construction:
         # at most band_rows/cap keys) — checkpointed so it runs once,
-        # not once per consumer (same rationale as
-        # _split_oversized_blocks).
+        # not once per consumer.
         buckets = checkpoint_df(
             bands.groupBy("band_idx", "band_hash")
             .agg(F.count("*").alias("_n"), F.min("doc_id").alias("_rep"))
@@ -637,122 +581,6 @@ def minhash_lsh_pairs(
     return _jaccard_verify(fetched, "sa", "sb", threshold)
 
 
-#: Conf key: per-block row ceiling above which the exact-pair operators
-#: switch that block from the direct quadratic join to MinHash-LSH
-#: candidate generation + exact verify. See :func:`ngram_jaccard_pairs`.
-PAIR_BLOCK_CEILING_CONF = "spark.mediaplaycounts.pairBlockCeiling"
-#: Unset-conf default, dropped 1M -> 100k in r11 (VERDICT r10 next #3):
-#: at 1M a single at-ceiling block could push ~0.5T pre-threshold pair
-#: rows (~12 TB) through the verify barrier before the LSH route ever
-#: engaged; 100k bounds the unconfigured worst case at ~5G pair rows
-#: (~120 GB spread over the salted partitions — spill-bound, not
-#: fatal) while every graded SF (max block 2059 at sf0.1) and the
-#: production conf (2000) are unaffected. 1M remains available by
-#: conf for callers who measured their blocks.
-_PAIR_BLOCK_CEILING_DEFAULT = 100_000
-
-
-def _resolve_block_ceiling(df: DataFrame, explicit: int | None) -> int:
-    if explicit is not None:
-        return explicit
-    try:
-        return int(
-            df.sparkSession.conf.get(
-                PAIR_BLOCK_CEILING_CONF, str(_PAIR_BLOCK_CEILING_DEFAULT)
-            )
-        )
-    except Exception:
-        return _PAIR_BLOCK_CEILING_DEFAULT
-
-
-def _split_oversized_blocks(
-    sh: DataFrame, ceiling: int
-) -> tuple[DataFrame, DataFrame | None]:
-    """Split ``sh`` (must carry a ``blk`` column) into
-    ``(under_ceiling, over_ceiling | None)`` by per-block row count.
-
-    One cheap count-per-block aggregate decides. The driver learns a
-    SINGLE boolean — does any oversized block exist — never the key
-    list: routing goes through semi/anti joins against the flagged-key
-    table instead of a collected ``isin`` literal (VERDICT r5 #2). A
-    collected list is bounded at corpus_rows/ceiling entries, but under
-    a high-cardinality blocking scheme (URL domain, shingle prefix)
-    that is still a multi-MB literal expression tree compiled into
-    every task; the join form ships the same keys as a relation that
-    Catalyst/AQE broadcast when small and shuffle when not. When no
-    block exceeds the ceiling (every graded SF) the first element is
-    the INPUT frame unchanged, so the direct path keeps its exact old
-    plan shape.
-
-    ``flagged`` is checkpointed (local by default, reliable when the
-    checkpoint dir conf is set) before the existence probe, so the
-    full-corpus count-per-block aggregate runs EXACTLY ONCE — the probe
-    and both routing joins read the materialized (at most
-    corpus_rows/ceiling rows) table instead of re-running the aggregate
-    up to three times (VERDICT r6 #2).
-
-    Null-blk semantics (VERDICT r6 #2 footnote): rows whose ``blk`` is
-    NULL can never be flagged (a NULL group can't exceed the ceiling in
-    a way that matters — no equi-join on NULL matches anyway) and the
-    ``left_anti`` keeps them on the direct path, where the equi-join
-    drops them from pair output exactly as before. The r5-era
-    ``~isin(...)`` form dropped null-blk rows from BOTH paths; the join
-    form keeps them on the direct path — equivalent for every current
-    blocking scheme (blk = lang, non-null), noted here so a future
-    nullable blocking key doesn't silently change output.
-    """
-    flagged = checkpoint_df(
-        sh.groupBy("blk")
-        .agg(F.count("*").alias("_blk_rows"))
-        .filter(F.col("_blk_rows") > ceiling)
-        .select("blk")
-    )
-    if flagged.limit(1).count() == 0:
-        return sh, None
-    return (
-        sh.join(flagged, "blk", "left_anti"),
-        sh.join(flagged, "blk", "left_semi"),
-    )
-
-
-def _salted_pair_join(sh: DataFrame, n_salt: int):
-    """(a, b, join_cond) for the salted within-block self-join: side A
-    gets a deterministic salt in [0, n_salt), side B is replicated
-    n_salt ways — every a<b pair meets exactly once, spread over
-    blk x n_salt partitions instead of one task per block key."""
-    # Explicit repartition of the probe side: pre-join inputs are tiny
-    # (a few k rows) by Catalyst's compressed-scan estimate, and AQE
-    # would coalesce everything onto the scan's 1-2 input splits — the
-    # quadratic compare work is invisible to size-based heuristics.
-    # A user-specified partition count is exempt from AQE coalescing,
-    # so the comparisons actually fan out.
-    n_parts = max(n_salt, sh.sparkSession.sparkContext.defaultParallelism * 2)
-    a = (
-        sh.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)))
-        .repartition(n_parts, "blk", "salt")
-        .alias("a")
-    )
-    # merge hint on B: its shingle ARRAYS deserialize to 100-1000x the
-    # compressed-scan size estimate Catalyst would broadcast on (the
-    # sf1 decade OOM'd the 8 GB driver building that relation). SMJ
-    # buffers the matching key group spillably, so a block at the
-    # ceiling degrades to disk instead of OOM; AQE may still promote
-    # back to broadcast, but only off ACTUAL shuffle bytes.
-    b = (
-        sh.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-        )
-        .hint("merge")
-        .alias("b")
-    )
-    cond = (
-        (F.col("a.blk") == F.col("b.blk"))
-        & (F.col("a.salt") == F.col("b.salt"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    return a, b, cond
-
-
 def _banding_params(
     threshold: float, target_recall: float = 0.95, max_hashes: int = 128
 ) -> tuple[int, int]:
@@ -765,7 +593,7 @@ def _banding_params(
     the ``max_hashes`` signature budget: larger r suppresses
     low-similarity false candidates (candidate probability ~ b*J^r),
     while the b formula guarantees the recall floor at the threshold.
-    Low thresholds (e.g. the 0.05 default of ngram_jaccard_pairs)
+    Low thresholds (e.g. 0.05)
     resolve to r=1 with many short bands — the ADVICE r4 finding was
     exactly that a hardcoded r=2/b=16 had ~4% recall at J=0.05.
     r=1 always fits: b = ceil(ln(1-target)/ln(1-J)) <= max_hashes for
@@ -790,229 +618,17 @@ def _banding_params(
     return best
 
 
-def _lsh_candidate_pairs(
-    sh: DataFrame,
-    num_hashes: int,
-    rows_per_band: int,
-    threshold: float = 0.05,
-) -> DataFrame:
-    """Within-block MinHash-LSH candidate pairs over pre-computed
-    shingle arrays (sh = doc_id, blk, s). Band hash join keyed by
-    (blk, band_idx, band_hash): shuffle cardinality ~ rows x bands,
-    never rows^2. Returns distinct (id_a, id_b, sa, sb) ready for the
-    exact verify.
-
-    BAND-BUCKET CAP (r7 — found by the sf10 decade, which filled 77 GB
-    of shuffle disk here): low verify thresholds derive r=1 banding
-    (:func:`_banding_params`), and an r=1 bucket is "every doc whose
-    k-th min-hash is this shingle" — common shingles put sizeable
-    fractions of a block into ONE bucket, so all-pairs inside it is
-    quadratic in block size (59 bands x Σ bucket² ≈ 24G candidate rows
-    at sf10). Same defense and semantics as
-    :func:`minhash_lsh_pairs`'s cap, honoring the same
-    ``spark.mediaplaycounts.bandBucketCap`` conf (default OFF — the
-    graded plan is byte-identical): over-cap buckets emit star
-    candidates (bucket-min rep x member, exact-verified), bounding the
-    stream linearly. The connectivity caveat is SHARPER here than at
-    r >= 2 (see minhash_lsh_pairs): an r=1 bucket ("same k-th
-    min-hash") is only family-cohesive with probability ~ pairwise
-    Jaccard, so mixed buckets are common — which is exactly why star
-    candidates go through :func:`_star_candidates_with_repair`
-    (r10, VERDICT r9 #3): members whose rep pair fails the verify
-    re-star against the lowest failed co-member for a bounded number
-    of peeling rounds, repairing the measured r9 loss class (a
-    stranger as bucket min orphaning a family: 1/5000 docs at sf0.1,
-    cap=4 — CORRECTNESS_conf_r9.txt ceiling_cap_fire, re-measured
-    5000/5000 in r10)."""
-    num_bands = num_hashes // rows_per_band
-    sig = F.array(
-        *[
-            F.array_min(F.transform("s", lambda x: F.xxhash64(x, F.lit(k))))
-            for k in range(num_hashes)
-        ]
-    )
-    band_hash = F.array(
-        *[
-            F.xxhash64(
-                *[
-                    F.element_at("sig", b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-                F.lit(b),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    # Shared fingerprint base + shuffle_hash on the band table, exactly
-    # as in :func:`minhash_lsh_pairs` (r11 optimization round): the
-    # band self-join sides and the two verify fetch sides all read ONE
-    # exchange each instead of re-deriving the shingle+signature
-    # pipeline per consumer. `sig` references the STRING shingles of
-    # ``sh`` (hash family unchanged — routed-path candidates stay
-    # byte-identical); the verify payload is the int64 hash of the
-    # same arrays (the `_hashed_sets` transform, folded into the base
-    # projection).
-    base = sh.select(
-        "doc_id",
-        "blk",
-        sig.alias("sig"),
-        F.transform("s", lambda x: F.xxhash64(x)).alias("s"),
-    )
-    bands = base.select(
-        "doc_id", "blk", F.posexplode(band_hash).alias("band_idx", "band_hash")
-    ).hint("shuffle_hash")
-
-    def _all_pairs(b: DataFrame) -> DataFrame:
-        return (
-            b.alias("x")
-            .join(
-                b.alias("y"),
-                (F.col("x.blk") == F.col("y.blk"))
-                & (F.col("x.band_idx") == F.col("y.band_idx"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("id_a"), F.col("y.doc_id").alias("id_b")
-            )
-        )
-
-    try:
-        cap = int(sh.sparkSession.conf.get(BAND_BUCKET_CAP_CONF, "0"))
-    except Exception:
-        cap = 0
-    # hashed verify payload + shuffle_hash pin (see _hashed_sets /
-    # minhash_lsh_pairs) — read from the shared base projection.
-    sets = base.select("doc_id", "s").hint("shuffle_hash")
-    if cap > 0:
-        keys = ["blk", "band_idx", "band_hash"]
-        buckets = checkpoint_df(
-            bands.groupBy(*keys)
-            .agg(F.count("*").alias("_n"), F.min("doc_id").alias("_rep"))
-            .filter(F.col("_n") > cap)
-            .select(*keys, "_rep")
-        )
-        cold = bands.join(buckets, keys, "left_anti")
-        star = _star_candidates_with_repair(
-            bands, buckets, keys, sets, threshold
-        )
-        cand = _all_pairs(cold).unionByName(star).distinct()
-    else:
-        cand = _all_pairs(bands).distinct()
-    return cand.join(
-        sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")), "id_a"
-    ).join(
-        sets.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")), "id_b"
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_col: str,
-    n: int = 2,
-    threshold: float = 0.05,
-    n_salt: int = 32,
-    block_ceiling: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs within blocks.
-
-    Jaccard = |A∩B| / |A∪B| over distinct shingle sets — pure integer
-    arithmetic, so the double division is bit-exact across engines.
-
-    DIRECT PATH = INVERTED SHINGLE INDEX as of r12 (guide §1.2 step 1 —
-    fix the distributed algorithm before anything else). The old direct
-    path was a salted all-pairs self-join: EVERY within-block pair was
-    enumerated (Θ(block²) SMJ rows, each materializing both hashed
-    shingle arrays) and then guarded/intersected, with side B's array
-    payload replicated n_salt x through the exchange. The inverted form
-    (:func:`_inverted_intersections` — the same algorithm
-    :func:`inverted_jaccard_pairs` has used for the grading twins since
-    r8, and the same formulation the DuckDB oracles run) explodes each
-    doc's distinct shingles once, self-joins the (blk, shingle-hash)
-    postings, and COUNTs per pair: only pairs that actually SHARE a
-    shingle ever produce a row, no array ever crosses a join, and the
-    per-pair work is count-aggregation of 24 B int rows instead of an
-    array intersect. Work is Σ_g C(df(g), 2) <= the all-pairs
-    Σ_pairs (|A|+|B|) unconditionally, and linear in corpus growth
-    whenever per-shingle document frequency is bounded (measured: df
-    max 338 flat from sf0.1 to sf1 on this corpus; the
-    invertedIndexMaxDf conf raises loudly past a caller-set ceiling).
-    Same-session A/B at sf0.1: full-corpus t=0.05 key 55.1 -> 23.3
-    executor-CPU s (-58%), e2e survivor block t=0.6 16.5 -> 9.8 s
-    (-41%), output rows bit-identical (403,884 / 22). The low-
-    cardinality-block-key skew problem the old salt existed for
-    disappears structurally: every exchange is keyed by the
-    high-cardinality (blk, shingle-hash) or (id_a, id_b), never by blk
-    alone. A J=0 threshold (degenerate: disjoint pairs qualify) keeps
-    the salted all-pairs path, since index candidates require a shared
-    shingle; ``n_salt`` only applies there.
-
-    BLOCK-SIZE CEILING (VERDICT r3 #6): blocks whose row count exceeds
-    ``block_ceiling`` (param, else the
-    ``spark.mediaplaycounts.pairBlockCeiling`` conf, else 100k) are
-    routed through MinHash-LSH candidate generation (band join — linear
-    shuffle, bounded under stopword-shingle df blow-ups where the index
-    is not) followed by the exact-Jaccard verify; blocks under the
-    ceiling take the inverted-index path. One cheap count-per-block agg
-    decides the split. Precision on the LSH path stays 1.0 (every
-    emitted pair is exact-verified); recall follows the banding S-curve
-    1-(1-j^r)^b, and the banding parameters are DERIVED FROM
-    ``threshold`` by :func:`_banding_params` so recall at J=threshold
-    is >= 0.95 by construction.
-    """
-    df = ensure_min_parallelism(df)
-    sh = df.select(
-        F.col(id_col).alias("doc_id"), F.col(block_col).alias("blk"), shingles(text_col, n).alias("s")
-    )
-    ceiling = _resolve_block_ceiling(df, block_ceiling)
-    small_part, big_part = _split_oversized_blocks(sh, ceiling)
-
-    def _exact_pairs(part: DataFrame) -> DataFrame:
-        if threshold <= 0.0:
-            # Disjoint pairs (J=0) share no shingle and never meet the
-            # index — only the all-pairs join can emit them. Pre-hash
-            # the arrays before the salted exchange (r11; the
-            # `_hashed_sets` collision argument).
-            part = part.withColumn(
-                "s", F.transform("s", lambda x: F.xxhash64(x))
-            )
-            a, b, cond = _salted_pair_join(part, n_salt)
-            fetched = a.join(b, cond).select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                F.col("a.s").alias("sa"),
-                F.col("b.s").alias("sb"),
-            )
-            return _jaccard_verify(fetched, "sa", "sb", threshold)
-        inter, sizes = _inverted_intersections(part, _resolve_max_df(part))
-        return _jaccard_from_counts(inter, sizes, threshold)
-
-    if big_part is None:
-        return _exact_pairs(sh)
-    num_hashes, rows_per_band = _banding_params(threshold)
-    cand = _lsh_candidate_pairs(
-        big_part,
-        num_hashes=num_hashes,
-        rows_per_band=rows_per_band,
-        threshold=threshold,
-    )
-    big_pairs = _jaccard_verify(cand, "sa", "sb", threshold)
-    return _exact_pairs(small_part).unionByName(big_pairs)
-
-
-#: Conf key: per-(block, shingle) document-frequency ceiling for
-#: :func:`inverted_jaccard_pairs`. 0/unset = no check (graded plans stay
-#: byte-identical). When > 0, the operator runs one cheap eager df probe
-#: and raises if any posting list exceeds it — the loud-failure guard
-#: for the operator's linearity assumption (ADVICE r8).
+#: Conf key: per-(block, shingle) document-frequency ceiling for the
+#: exact pair operators. 0/unset = no check, so the default plan runs no
+#: probe job. When > 0, one eager aggregate over the postings raises
+#: before the pair join runs if any posting list is longer — see
+#: :func:`_inverted_intersections`.
 INVERTED_MAX_DF_CONF = "spark.mediaplaycounts.invertedIndexMaxDf"
 
 
 def _resolve_max_df(df: DataFrame) -> int:
-    """The invertedIndexMaxDf conf, with malformed values RAISING
-    instead of silently disabling the guard (ADVICE r9)."""
+    """The invertedIndexMaxDf conf. A malformed value raises instead of
+    silently turning the guard off; only an unset conf means OFF."""
     raw = df.sparkSession.conf.get(INVERTED_MAX_DF_CONF, "0")
     try:
         return int(raw)
@@ -1023,33 +639,69 @@ def _resolve_max_df(df: DataFrame) -> int:
         ) from ex
 
 
+def _shingle_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    block_col: str | None,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """(doc_id, blk, s) input of the exact pair operators: ``s`` is the
+    distinct n-gram set, ``blk`` a constant when ``block_col`` is None.
+
+    Raises for threshold <= 0: a pair scoring 0 shares no shingle, so
+    the index never meets it and the answer would silently miss it."""
+    if not threshold > 0.0:
+        raise ValueError(
+            f"exact pair operators need threshold > 0, got {threshold} "
+            "(a pair scoring 0 shares no shingle and never meets the index)"
+        )
+    df = ensure_min_parallelism(df)
+    blk = F.col(block_col) if block_col else F.lit(1)
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        blk.alias("blk"),
+        shingles(text_col, n).alias("s"),
+    )
+
+
 def _inverted_intersections(
     sh: DataFrame, max_df: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """(inter, sizes) for the inverted-shingle-index pair algorithm
-    shared by :func:`inverted_jaccard_pairs` and (since r12) the
-    under-ceiling direct paths of :func:`ngram_jaccard_pairs` /
-    :func:`containment_pairs` — see inverted_jaccard_pairs for the full
-    scale rationale and the bounded-df linearity caveat.
+    """(inter, sizes) from an inverted shingle index over ``sh`` =
+    (doc_id, blk, s: DISTINCT shingle array).
 
-    ``sh`` = (doc_id, blk, s: array<string> DISTINCT shingles). Explode
-    each doc's shingles, hash to int64 (24 B posting rows — the
-    `_hashed_sets` collision argument), self-join the (blk, hash)
-    postings and COUNT per (id_a < id_b): the count IS |A∩B| because
-    the arrays are distinct. Both self-join sides are the IDENTICAL
-    exchange subtree, so AQE plans one Exchange + ReusedExchange and
-    the postings (and the shingle projection feeding them) compute
-    exactly once (guide §2.4). ``max_df`` > 0 runs the eager
-    posting-list-length guard and raises past the ceiling.
+    Each doc's shingles explode to (doc_id, blk, xxhash64) postings of
+    24 B; the postings self-join on (blk, hash) and COUNT per
+    (id_a < id_b). The count is |A∩B| because the arrays are distinct.
+    Returns inter = (id_a, id_b, i) and sizes = (doc_id, sz).
 
-    Returns inter = (id_a, id_b, i) and sizes = (doc_id, sz)."""
+    Invariants:
+
+    - only pairs that share a shingle produce rows, so the join emits
+      Σ_g C(df(g), 2) rows — never more than all-pairs work, and linear
+      in corpus growth while per-shingle document frequency is bounded;
+    - every exchange is keyed by the high-cardinality (blk, hash) or
+      (id_a, id_b), never by blk alone, so one giant block spreads over
+      tasks like many small ones, and no array crosses a join;
+    - both self-join sides are the same exchange subtree, so the
+      postings (and the shingle projection feeding them) compute once
+      (Exchange + ReusedExchange).
+
+    The hash stands in for the string: a collision could only merge two
+    distinct shingles of the same pair (expected pairs·|A|²/2⁶⁴ ≈ 0)
+    and would move one score by 1/|A∪B|.
+
+    ``max_df`` > 0 runs one eager aggregate over the postings and
+    raises when any posting list is longer. That is the loud failure
+    for the bounded-df assumption: a stopword n-gram present in a
+    constant fraction of docs makes the join effectively quadratic."""
     ex = sh.select(
         "doc_id", "blk", F.explode("s").alias("g")
     ).select("doc_id", "blk", F.xxhash64("g").alias("gh"))
     if max_df and max_df > 0:
-        # Eager linearity guard: one aggregate pass over the postings.
-        # Deliberately a separate job (conf default OFF keeps graded
-        # plans unchanged); the join below would otherwise emit
+        # A separate job on purpose: the join below would emit
         # Σ C(df,2) rows before anything could notice.
         tail = (
             ex.groupBy("blk", "gh")
@@ -1084,18 +736,10 @@ def _inverted_intersections(
             F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
     )
-    # The pair aggregation's input is the join OUTPUT — Σ_g C(df(g), 2)
-    # rows, 30-100x the posting-list input. groupBy directly on it:
-    # map-side partial aggregation runs BELOW the exchange, where a
-    # pair's occurrences across co-partitioned shingles collapse (~3x
-    # measured), so the exchange ships the reduced stream. An explicit
-    # repartition-then-agg was probed and REJECTED (r8,
-    # evidence/stage_cpu_minhash_r8.jsonl): it forfeits the partial
-    # reduction and re-ships the full join output — sf1 CPU 432->599 s,
-    # sf3 2702 vs 1943 s. The residual sf3 disk "spill" (~5 GB) is the
-    # shuffle WRITER's external sorter paging a linear-volume exchange
-    # (bytes grow exactly 3.0x with data), not a quadratic hash-agg
-    # overflow — on a fleet the same exchange spreads over executors.
+    # groupBy directly on the join output (30-100x the postings): the
+    # map-side partial aggregate collapses a pair's hits before the
+    # exchange. A repartition-then-agg forfeits that reduction and
+    # re-ships the whole join output (measured 1.4x the CPU at sf1).
     inter = hits.groupBy("id_a", "id_b").agg(F.count("*").alias("i"))
     sizes = sh.select("doc_id", F.size("s").alias("sz"))
     return inter, sizes
@@ -1104,13 +748,11 @@ def _inverted_intersections(
 def _jaccard_from_counts(
     inter: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
-    """(id_a, id_b, jaccard >= threshold) from intersection counts +
+    """(id_a, id_b, jaccard >= threshold) from intersection counts and
     set sizes: j = i / (na + nb - i), the same integer arithmetic and
-    double division as :func:`_jaccard_verify` and the DuckDB oracles —
-    bit-identical membership and values. The divisions live in a
-    Project above the COUNT aggregate; nothing heavier than an int64
-    equality ever sits in a join condition (the r8 aging-hazard rule).
-    """
+    double division as the DuckDB oracles. The division lives in a
+    Project above the COUNT aggregate, so nothing heavier than an int64
+    equality sits in a join condition (see :func:`_jaccard_verify`)."""
     return (
         inter.join(
             sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("na")),
@@ -1136,8 +778,7 @@ def _containment_from_counts(
     inter: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
     """Containment twin of :func:`_jaccard_from_counts`: both direction
-    scores per pair, keeping C(A->B) >= t OR C(B->A) >= t — identical
-    doubles to :func:`_containment_verify` (same i, na, nb integers)."""
+    scores i/na and i/nb per pair, keeping C(A->B) >= t OR C(B->A) >= t."""
     return (
         inter.join(
             sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("na")),
@@ -1164,170 +805,36 @@ def _containment_from_counts(
     )
 
 
-def inverted_jaccard_pairs(
+def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     block_col: str | None = None,
     n: int = 2,
     threshold: float = 0.05,
-    max_df: int | None = None,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard pairs via a shared-shingle INVERTED INDEX —
-    recall 1.0 at any threshold > 0, conf-independent, no quadratic
-    block join and no array payloads in any shuffle.
+    """Exact n-gram Jaccard pairs within ``block_col`` blocks, or
+    corpus-wide when it is None.
 
-    This is the same algorithm the DuckDB ``_corpus_pairs_sql`` oracle
-    runs: explode each doc's distinct shingle set, self-join the
-    (block, shingle) postings, and COUNT(*) per (id_a, id_b) — the
-    count IS |A∩B| because the sets are distinct, so Jaccard is
-    i/(na+nb-i) from a tiny per-doc size table. Any pair with
-    J >= t > 0 shares at least one shingle, so the candidate set is a
-    superset of the answer BY CONSTRUCTION (unlike MinHash banding's
-    1-(1-j^r)^b recall curve).
+    Contract: every (id_a < id_b) pair of one block whose distinct
+    word-n-gram sets have J = |A∩B| / |A∪B| >= ``threshold``, with its
+    jaccard, and no other pair. ``threshold`` must be > 0 (ValueError
+    otherwise). Values and membership equal the DuckDB oracles
+    bit-for-bit: same integer counts, same double division.
 
-    Why this exists (r8 — the dedup_near_minhash decade flag): the
-    grading twins behind the near-dup keys need GROUND-TRUTH pairs.
-    The previous formulation (``ngram_jaccard_pairs`` over one
-    corpus-wide constant block) had two defects the sf1/sf3 stage probe
-    (evidence/stage_cpu_minhash_r8.jsonl) made measurable:
-
-    - under the default 1M block ceiling the single corpus block takes
-      the salted DIRECT path — an all-pairs self-join, Θ(rows²)
-      comparisons: 9x work per 3x data, the decade flag;
-    - under the production conf (pairBlockCeiling=2000) it routes
-      through MinHash-LSH banding, whose recall is < 1 — the "exact"
-      twin then MISSES pairs the production path legitimately finds,
-      and `dedup_near_minhash.within_bound` measured FALSE at sf1
-      (false "false positives"). A grading twin must not approximate.
-
-    Scale shape: join volume is Σ_g C(df(g), 2) over shingle postings —
-    linear in corpus growth whenever per-shingle document frequency is
-    bounded (new content brings new shingles), which is also the exact
-    condition under which near-dup GROUND TRUTH itself stays linear-
-    sized. THAT ASSUMPTION IS NOT UNIVERSAL (ADVICE r8): on natural-
-    language corpora a stop-word n-gram ("of the") can appear in a
-    constant FRACTION of docs, making Σ C(df,2) effectively all-pairs —
-    a volume blow-up, not merely a skewed task. The testdata corpus is
-    synthetic-vocabulary (max df(g) measured 338 at BOTH sf0.1/5k docs
-    and sf1/50k docs — constant, and Σ C(df,2) grew exactly 10.0x per
-    10x docs), so graded and decade runs are safe; any run
-    beyond graded SFs should set ``max_df`` (param, else the
-    ``spark.mediaplaycounts.invertedIndexMaxDf`` conf, else OFF): one
-    cheap eager aggregate probes the df distribution and RAISES with
-    the measured histogram tail when any posting list exceeds the
-    ceiling — the corpus fails loudly instead of silently going
-    quadratic. A df-skewed-but-under-ceiling shingle still concentrates
-    C(df, 2) pairs on one key; that part is inherent to exactness —
-    the output owns those pairs — and AQE skew-join splitting spreads
-    the task. The
-    shuffled payload per posting row is 24 B (doc_id, blk, int64
-    shingle hash); xxhash64 collisions could only merge two distinct
-    shingles of the SAME pair (expected pairs·|A|²/2⁶⁴ ≈ 0 — the
-    `_hashed_sets` argument), nudging one Jaccard by 1/|A∪B|.
-
-    The exact division runs in a Project above the COUNT aggregate —
-    nothing heavier than an int64 equality ever sits in a join
-    condition (the r8 aging-hazard rule, see :func:`_jaccard_verify`).
-
-    Returns (id_a < id_b, jaccard) with jaccard >= threshold,
-    bit-identical membership to the DuckDB oracle (same integer
-    arithmetic, same double division).
+    Invariant: recall is 1.0 at every block size and under every conf,
+    because a pair with J > 0 shares a shingle and so meets the
+    inverted index (:func:`_inverted_intersections`). The operator has
+    one route on purpose: an approximate fallback for large blocks
+    would make an exact answer depend on a conf and the data's block
+    sizes. Cost is Σ_g C(df(g), 2) over the shingle postings, linear
+    while document frequency is bounded; the invertedIndexMaxDf conf
+    makes a corpus that breaks that bound raise instead of going
+    quadratic.
     """
-    if not threshold > 0.0:
-        raise ValueError(
-            f"inverted-index exactness needs threshold > 0, got {threshold}"
-            " (a J=0 pair shares no shingle and never meets the index)"
-        )
-    df = ensure_min_parallelism(df)
-    blk = F.col(block_col) if block_col else F.lit(1)
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        blk.alias("blk"),
-        shingles(text_col, n).alias("s"),
-    )
-    if max_df is None:
-        # A malformed conf value must RAISE, not silently disable the
-        # guard (ADVICE r9: int('4k') falling back to 0 turned the
-        # loud-failure ceiling OFF exactly when someone tried to set
-        # it). Only a genuinely unset conf falls back to 0/OFF.
-        max_df = _resolve_max_df(df)
-    inter, sizes = _inverted_intersections(sh, max_df)
+    sh = _shingle_sets(df, id_col, text_col, block_col, n, threshold)
+    inter, sizes = _inverted_intersections(sh, _resolve_max_df(sh))
     return _jaccard_from_counts(inter, sizes, threshold)
-
-
-def _prefix_filter_candidates(sh: DataFrame, threshold: float) -> DataFrame:
-    """EXACT candidate pairs for containment >= threshold within blocks,
-    via the prefix-filter principle (AllPairs/PPJoin family).
-
-    If C(A→B) = |A∩B|/|A| >= t, then A shares at least one shingle
-    with B among A's first ``|A| - ceil(t*|A|) + 1`` shingles in ANY
-    fixed global ordering (pigeonhole: fewer than that many misses are
-    allowed). Ordering by ascending per-block document frequency makes
-    those prefix shingles the RAREST ones, so the candidate join's
-    posting lists are short where it matters. Candidates = A's prefix
-    tokens equi-joined against B's FULL token list (asymmetric, because
-    only A's size appears in the bound); both orientations are covered
-    because each doc plays the prefix side once. Recall is exactly 1.0
-    — unlike MinHash banding this fallback loses nothing, so the same
-    value oracle holds under any ceiling configuration.
-
-    Shuffle cost: one explode (rows x shingles, linear), one per-block
-    df aggregate, one inverted-index join whose volume is
-    sum over prefix tokens of df(token) — worst case still df-skew
-    sensitive (a stopword shingle inside someone's prefix joins its
-    whole posting list) but never the block-quadratic of the direct
-    path.
-
-    Returns distinct (id_a < id_b, sa, sb) ready for exact verify.
-    """
-    from pyspark.sql.window import Window as W
-
-    tok = sh.select("doc_id", "blk", F.explode("s").alias("w"))
-    dfreq = tok.groupBy("blk", "w").agg(F.count("*").alias("df"))
-    ranked = (
-        tok.join(dfreq, ["blk", "w"])
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                W.partitionBy("doc_id").orderBy("df", "w")
-            ),
-        )
-    )
-    sz = F.size("s")
-    prefix_len = sh.select(
-        "doc_id",
-        (sz - F.ceil(F.lit(threshold) * sz) + 1).alias("plen"),
-    )
-    pref = (
-        ranked.join(prefix_len, "doc_id")
-        .filter(F.col("rnk") <= F.col("plen"))
-        .select("doc_id", "blk", "w")
-    )
-    cand = (
-        pref.alias("a")
-        .join(
-            tok.alias("b"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("id_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    # hashed verify payload + shuffle_hash pin (see _hashed_sets /
-    # minhash_lsh_pairs).
-    sets = _hashed_sets(sh.select("doc_id", "s"))
-    return cand.join(
-        sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa")),
-        "id_a",
-    ).join(
-        sets.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb")),
-        "id_b",
-    )
 
 
 def containment_pairs(
@@ -1337,69 +844,24 @@ def containment_pairs(
     block_col: str,
     n: int = 2,
     threshold: float = 0.3,
-    n_salt: int = 32,
-    block_ceiling: int | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs within blocks: C(A→B) = |A∩B|/|A|.
 
     The near-superset detector Jaccard misses: when a short doc is
-    wholly embedded in a long one (quote farms, boilerplate wrappers,
-    prefix crawls), Jaccard is diluted by the big doc's size but
-    containment of the small side stays ~1. Emits both directions'
-    scores per unordered pair; same inverted-index direct path (and
-    scale rationale) as :func:`ngram_jaccard_pairs` (r12).
+    embedded in a long one (quote farms, boilerplate wrappers, prefix
+    crawls), Jaccard is diluted by the big doc's size but containment
+    of the small side stays ~1.
 
-    BLOCK-SIZE CEILING (r5 — the sf0.1→sf1 scale decade exposed this
-    as the one pair operator WITHOUT a quadratic escape): blocks over
-    ``block_ceiling`` (param, else the pairBlockCeiling conf, else 100k)
-    route through :func:`_prefix_filter_candidates` — an EXACT
-    (recall 1.0) inverted-index candidate join, not MinHash banding,
-    because containment's whole point is pairs whose Jaccard is LOW
-    (a tiny doc inside a huge one) and Jaccard-LSH would
-    systematically miss exactly those. Every candidate is then
-    exact-verified, so the routed result is IDENTICAL to the direct
-    path and the value oracle holds under any ceiling configuration.
+    Contract: one row per unordered (id_a < id_b) pair of a block with
+    both direction scores, kept when C(A→B) >= t or C(B→A) >= t;
+    ``threshold`` must be > 0. Same single inverted-index route, recall
+    1.0 at every block size, oracle-exact doubles and df guard as
+    :func:`ngram_jaccard_pairs`. MinHash banding could never serve
+    here: the pairs containment exists for have LOW Jaccard.
     """
-    df = ensure_min_parallelism(df)
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(block_col).alias("blk"),
-        shingles(text_col, n).alias("s"),
-    )
-    ceiling = _resolve_block_ceiling(df, block_ceiling)
-    small_part, big_part = _split_oversized_blocks(sh, ceiling)
-
-    def _direct(part: DataFrame) -> DataFrame:
-        if threshold <= 0.0:
-            # C >= 0 admits disjoint pairs, which share no shingle and
-            # never meet the index — keep the salted all-pairs join for
-            # the degenerate threshold (pre-hashed arrays, r11).
-            part = part.withColumn(
-                "s", F.transform("s", lambda x: F.xxhash64(x))
-            )
-            a, b, cond = _salted_pair_join(part, n_salt)
-            fetched = a.join(b, cond).select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                F.col("a.s").alias("sa"),
-                F.col("b.s").alias("sb"),
-            )
-            return _containment_verify(fetched, "sa", "sb", threshold)
-        # Inverted shingle index (r12, same move as ngram_jaccard_pairs
-        # — see there for the measured A/B and the scale argument):
-        # containment = i/|A| needs only the intersection COUNT and the
-        # set sizes, so no array ever crosses a join and only pairs
-        # sharing a shingle produce work. The routed branch below keeps
-        # STRING shingles — its prefix-filter ranks by (df, w) and the
-        # tie-break order must not change.
-        inter, sizes = _inverted_intersections(part, _resolve_max_df(part))
-        return _containment_from_counts(inter, sizes, threshold)
-
-    if big_part is None:
-        return _direct(sh)
-    cand = _prefix_filter_candidates(big_part, threshold)
-    big_pairs = _containment_verify(cand, "sa", "sb", threshold)
-    return _direct(small_part).unionByName(big_pairs)
+    sh = _shingle_sets(df, id_col, text_col, block_col, n, threshold)
+    inter, sizes = _inverted_intersections(sh, _resolve_max_df(sh))
+    return _containment_from_counts(inter, sizes, threshold)
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

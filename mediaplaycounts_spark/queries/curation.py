@@ -1085,7 +1085,7 @@ def pipeline_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE full curation composition, raw crawl -> training manifest, as
     ONE lineage (VERDICT r5 #5 / r6 next #4): code router -> PII
     redaction -> Gopher quality gate -> exact dedup -> near dedup
-    (production block ceiling) -> eval-set decontamination -> domain
+    -> eval-set decontamination -> domain
     mixture -> packed sequences + shard manifest. Every stage reuses
     the per-stage operator's exact semantics (same constants, same
     integer/ppm arithmetic), and the DuckDB twin composes the same
@@ -1098,9 +1098,8 @@ def pipeline_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune/normalize BEFORE anything tokenizes; the Gopher gate drops
     ~60% of rows before the first shuffle; exact dedup is one
     (hash, id) groupBy; near dedup runs on exact-dedup SURVIVORS only,
-    through ngram_jaccard_pairs — which self-routes oversized blocks
-    through LSH candidates under `spark.mediaplaycounts.
-    pairBlockCeiling` (the production conf) — then min-label
+    through ngram_jaccard_pairs — exact at every block size, so the
+    manifest is the same under any conf — then min-label
     connected components; decontamination broadcasts the (small) eval
     trigram set; the mixture rate table is a per-lang count broadcast
     back; packing is the Arrow grouped-map kernel per hash shard;
@@ -1204,7 +1203,7 @@ def pipeline_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stage 5: near dedup on survivors — exact 2-gram Jaccard pairs
-    # (block-ceiling self-routing inside) + connected components;
+    # (inverted shingle index) + connected components;
     # survivor = component representative (min id; singletons survive)
     pairs = D.ngram_jaccard_pairs(
         exd, "doc_id", "rtext", "lang", n=2, threshold=_E2E_NEAR_THRESHOLD

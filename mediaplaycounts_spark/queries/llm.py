@@ -193,17 +193,13 @@ def _exact_allpairs_jaccard(spark: SparkSession, sf_dir: str, threshold: float):
     """Corpus-wide exact 2-gram Jaccard pairs — the GROUND TRUTH the
     near-dup grading twins are measured against.
 
-    r8: inverted-shingle-index join (:func:`D.inverted_jaccard_pairs` —
-    the same algorithm as the DuckDB `_corpus_pairs_sql` oracle, linear
-    whenever per-shingle df is bounded) instead of the old constant-
-    block `ngram_jaccard_pairs` form, which was Θ(rows²) under the
-    default ceiling (the dedup_near_minhash sf1→sf3 decade flag:
-    exact05 twin = 3572 of 4188 composition CPU-s at sf1) and — worse —
-    silently became LSH-APPROXIMATE under the production conf's low
-    pairBlockCeiling, making `within_bound` measure FALSE at sf1
-    (a ground-truth stage must never route through a recall<1 path)."""
+    Blockless :func:`D.ngram_jaccard_pairs`: the inverted shingle
+    index, the same algorithm as the DuckDB `_corpus_pairs_sql` oracle.
+    A ground-truth stage must have recall 1.0 under every conf, which
+    that operator guarantees, and its work is linear whenever
+    per-shingle document frequency is bounded."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.inverted_jaccard_pairs(
+    return D.ngram_jaccard_pairs(
         docs, "doc_id", "text", None, n=2, threshold=threshold
     )
 
@@ -1560,8 +1556,8 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-superset detection via exact 2-gram CONTAINMENT (|A∩B|/|A|),
     lang-blocked: catches a short doc embedded in a long one, which
-    Jaccard dilutes below any usable threshold. Same salted-block join
-    scale shape as dedup_ngram_jaccard; both direction scores emitted.
+    Jaccard dilutes below any usable threshold. Same inverted shingle
+    index as dedup_ngram_jaccard; both direction scores emitted.
     Pure integer set sizes + one double division — bit-exact."""
     docs = load_table(spark, sf_dir, "documents")
     return D.containment_pairs(

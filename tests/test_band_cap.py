@@ -262,7 +262,7 @@ def test_malformed_maxdf_conf_raises(spark):
     spark.conf.set(D.INVERTED_MAX_DF_CONF, "4k")
     try:
         with pytest.raises(ValueError, match="invertedIndexMaxDf"):
-            D.inverted_jaccard_pairs(docs, "doc_id", "text")
+            D.ngram_jaccard_pairs(docs, "doc_id", "text")
     finally:
         spark.conf.unset(D.INVERTED_MAX_DF_CONF)
 

@@ -39,69 +39,82 @@ def test_ngram_jaccard_finds_near_dup(spark, docs):
     assert (1, 3) not in got
 
 
+def _reference_pairs(rows, n, threshold, blocked):
+    """Pure-Python exact Jaccard and containment pairs: every id_a < id_b
+    pair (same block when ``blocked``) over distinct word n-gram sets,
+    built the way :func:`D.shingles` builds them."""
+
+    def grams(text):
+        t = text.split(" ")
+        return {" ".join(t[k : k + n]) for k in range(max(len(t) - n + 1, 1))}
+
+    jac, cont = {}, {}
+    for a_id, a_text, a_blk in rows:
+        for b_id, b_text, b_blk in rows:
+            if a_id >= b_id or (blocked and a_blk != b_blk):
+                continue
+            ga, gb = grams(a_text), grams(b_text)
+            i = len(ga & gb)
+            j = i / (len(ga) + len(gb) - i)
+            if j >= threshold:
+                jac[(a_id, b_id)] = j
+            c_ab, c_ba = i / len(ga), i / len(gb)
+            if c_ab >= threshold or c_ba >= threshold:
+                cont[(a_id, b_id)] = (c_ab, c_ba)
+    return jac, cont
+
+
 def test_inverted_jaccard_matches_direct_quadratic(spark, docs):
-    """r8: the grading-twin path (inverted shingle index) must emit the
-    SAME (pair, jaccard) set as the direct quadratic join at every
-    threshold — recall 1.0 is the property that lets grading twins use
-    it at any conf/scale (the LSH-routed twin measured within_bound
-    FALSE at sf1 because banding recall < 1)."""
+    """Both exact pair operators equal a direct quadratic reference in
+    plain Python — pairs and scores — at low, middle and high
+    thresholds, lang-blocked and corpus-wide."""
+    rows = [tuple(r) for r in docs.collect()]
     for t in (0.05, 0.5, 0.9):
-        direct = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", "lang", n=2, threshold=t
-            ).collect()
-        }
-        inv = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.inverted_jaccard_pairs(
-                docs, "doc_id", "text", "lang", n=2, threshold=t
-            ).collect()
-        }
-        assert inv == direct, (t, inv, direct)
-    # blockless form pairs across blocks too (corpus-wide ground truth)
-    allb = {
-        (r["id_a"], r["id_b"])
-        for r in D.inverted_jaccard_pairs(
-            docs, "doc_id", "text", None, n=2, threshold=0.05
-        ).collect()
-    }
-    assert (1, 4) in allb and (1, 2) in allb
-    with pytest.raises(ValueError):
-        D.inverted_jaccard_pairs(docs, "doc_id", "text", None, threshold=0.0)
+        for blk in ("lang", None):
+            ref_j, ref_c = _reference_pairs(rows, 2, t, blocked=blk is not None)
+            got_j = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in D.ngram_jaccard_pairs(
+                    docs, "doc_id", "text", blk, n=2, threshold=t
+                ).collect()
+            }
+            assert got_j == ref_j, (t, blk, got_j, ref_j)
+            if blk is None:
+                continue  # containment_pairs is always blocked
+            got_c = {
+                (r.id_a, r.id_b): (r.containment_ab, r.containment_ba)
+                for r in D.containment_pairs(
+                    docs, "doc_id", "text", blk, n=2, threshold=t
+                ).collect()
+            }
+            assert got_c == ref_c, (t, got_c, ref_c)
+    assert (1, 4) in ref_j  # the fixture's exact dup survives t=0.9
+    for op, blk in ((D.ngram_jaccard_pairs, None), (D.containment_pairs, "lang")):
+        with pytest.raises(ValueError, match="threshold > 0"):
+            op(docs, "doc_id", "text", blk, threshold=0.0)
 
 
 def test_inverted_jaccard_df_ceiling_guard(spark, docs):
-    """ADVICE r8: the bounded-df linearity assumption must fail LOUDLY.
+    """The bounded-df linearity assumption must fail LOUDLY.
     'the quick'/'quick brown'/... appear in docs 1, 2, 4 (df=3), so a
-    ceiling of 2 fires; a ceiling above every posting list passes and
-    returns the same pairs as the unguarded run. Both the explicit
-    param and the conf spelling engage it."""
-    with pytest.raises(ValueError, match="df ceiling violated"):
-        D.inverted_jaccard_pairs(
-            docs, "doc_id", "text", None, threshold=0.05, max_df=2
-        ).collect()
-    ok = {
-        (r["id_a"], r["id_b"])
-        for r in D.inverted_jaccard_pairs(
-            docs, "doc_id", "text", None, threshold=0.05, max_df=100
-        ).collect()
-    }
+    ceiling of 2 fires; a ceiling above every posting list returns the
+    same pairs as the unguarded run."""
     un = {
-        (r["id_a"], r["id_b"])
-        for r in D.inverted_jaccard_pairs(
-            docs, "doc_id", "text", None, threshold=0.05
-        ).collect()
+        (r.id_a, r.id_b)
+        for r in D.ngram_jaccard_pairs(docs, "doc_id", "text").collect()
     }
-    assert ok == un
-    spark.conf.set(D.INVERTED_MAX_DF_CONF, "2")
     try:
+        spark.conf.set(D.INVERTED_MAX_DF_CONF, "2")
         with pytest.raises(ValueError, match="df ceiling violated"):
-            D.inverted_jaccard_pairs(
-                docs, "doc_id", "text", None, threshold=0.05
-            ).collect()
+            D.ngram_jaccard_pairs(docs, "doc_id", "text").collect()
+        spark.conf.set(D.INVERTED_MAX_DF_CONF, "100")
+        ok = {
+            (r.id_a, r.id_b)
+            for r in D.ngram_jaccard_pairs(docs, "doc_id", "text").collect()
+        }
     finally:
         spark.conf.unset(D.INVERTED_MAX_DF_CONF)
+    assert ok == un
 
 
 def test_minhash_lsh_finds_exact_and_near(spark, docs):

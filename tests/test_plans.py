@@ -244,16 +244,6 @@ def test_shingle_array_join_sides_never_broadcast(spark, queries):
         "containment_pairs": plan_of(
             D.containment_pairs(docs, "doc_id", "text", "lang")
         ),
-        "ngram_jaccard_lsh_routed": plan_of(
-            D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", "lang", block_ceiling=5
-            )
-        ),
-        "containment_prefix_routed": plan_of(
-            D.containment_pairs(
-                docs, "doc_id", "text", "lang", block_ceiling=5
-            )
-        ),
         "cosine_pairs_direct": plan_of(
             Sim.cosine_pairs_blocked(em, "vec_id", "embedding", "blk", 0.8)
         ),

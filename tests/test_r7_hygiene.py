@@ -53,10 +53,7 @@ def test_split_oversized_blocks_single_aggregate_pass(spark):
     (checkpoint), so neither routing join re-plans the full-corpus
     groupBy-count. Plan-level proof: the anti/semi join trees contain a
     LogicalRDD scan for the flagged side and ZERO Aggregate nodes."""
-    from mediaplaycounts_spark.operators.dedup import (
-        _split_oversized_blocks,
-        with_shingles,
-    )
+    from mediaplaycounts_spark.operators.similarity import _split_oversized_blocks
 
     rows = [(i, "hot", f"w{i} common tokens {i % 3}") for i in range(40)]
     rows += [(100 + i, "cold", f"x{i} other stuff") for i in range(5)]
@@ -80,7 +77,7 @@ def test_split_oversized_blocks_single_aggregate_pass(spark):
 def test_split_oversized_blocks_no_flag_returns_input_unchanged(spark):
     """When nothing exceeds the ceiling the first element must be the
     INPUT frame object (exact old plan shape preserved)."""
-    from mediaplaycounts_spark.operators.dedup import _split_oversized_blocks
+    from mediaplaycounts_spark.operators.similarity import _split_oversized_blocks
 
     sh = spark.createDataFrame(
         [(1, "en", ["a"]), (2, "fr", ["b"])],

@@ -196,38 +196,21 @@ def test_salt_fanout_engages_on_skewed_blocks(spark, skew_dir):
         )
 
 
-def test_block_ceiling_routes_giant_block_through_lsh(spark, skew_dir):
-    """VERDICT r3 #6: a block over the pairBlockCeiling must switch to
-    MinHash-LSH candidate generation + exact verify, and — on a corpus
-    whose matching pairs are well above the banding S-curve knee —
-    agree with the direct exact path pair-for-pair.
-
-    The skew fixture's 'en' block holds 1,600 docs (hot paragraph
-    x1000 + 25 near-dup families at J≈0.95). At threshold 0.5 the
-    banding parameters derive from the threshold (_banding_params:
-    r=3, b=23), giving per-pair miss probability (1-j^3)^23 ≈ 1e-19
-    at j=0.95 — and the hashes are fixed seeds over fixed fixture
-    text, so the comparison is deterministic."""
-    from mediaplaycounts_spark.operators.dedup import ngram_jaccard_pairs
+def test_df_guard_raises_on_hot_paragraph(spark, skew_dir):
+    """The hot paragraph's 2-grams each sit in N_HOT docs of the 'en'
+    block. With invertedIndexMaxDf below that, both exact pair
+    operators must raise before the pair join runs — never return an
+    answer after a quadratic join, and never a partial one."""
+    from mediaplaycounts_spark.operators import dedup as D
 
     docs = spark.read.parquet(f"{skew_dir}/documents.parquet")
-    direct = ngram_jaccard_pairs(
-        docs, "doc_id", "text", "lang", n=2, threshold=0.5,
-        block_ceiling=10**9,
-    )
-    routed = ngram_jaccard_pairs(
-        docs, "doc_id", "text", "lang", n=2, threshold=0.5,
-        block_ceiling=500,
-    )
-    # the LSH branch must actually be IN the routed plan: band explode
-    # (posexplode -> band_idx/band_hash join) only exists on that path
-    plan = _plan(routed)
-    assert "band_hash" in plan, "LSH candidate path did not engage"
-    assert "band_hash" not in _plan(direct)
-    d = {(r.id_a, r.id_b): r.jaccard for r in direct.collect()}
-    r = {(r.id_a, r.id_b): r.jaccard for r in routed.collect()}
-    assert len(d) >= 25  # the planted families all match at 0.5
-    assert d == r
+    spark.conf.set(D.INVERTED_MAX_DF_CONF, str(N_HOT - 1))
+    try:
+        for op in (D.ngram_jaccard_pairs, D.containment_pairs):
+            with pytest.raises(ValueError, match="df ceiling violated"):
+                op(docs, "doc_id", "text", "lang", n=2, threshold=0.5)
+    finally:
+        spark.conf.unset(D.INVERTED_MAX_DF_CONF)
 
 
 def test_block_ceiling_cosine_pairs_lsh_agrees(spark, skew_dir):
@@ -258,28 +241,4 @@ def test_block_ceiling_cosine_pairs_lsh_agrees(spark, skew_dir):
     d = {(r.id_a, r.id_b) for r in direct.collect()}
     r = {(r.id_a, r.id_b) for r in routed.collect()}
     assert {(i, 600 + i) for i in range(30)} <= d
-    assert d == r
-
-
-def test_block_ceiling_containment_prefix_filter_exact(spark, skew_dir):
-    """r5: containment_pairs' oversized-block route is the PREFIX-FILTER
-    candidate join (recall exactly 1.0, unlike MinHash banding), so the
-    routed result must equal the direct exact path PAIR-FOR-PAIR,
-    including both containment scores."""
-    from mediaplaycounts_spark.operators.dedup import containment_pairs
-
-    docs = spark.read.parquet(f"{skew_dir}/documents.parquet")
-    direct = containment_pairs(
-        docs, "doc_id", "text", "lang", n=2, threshold=0.4,
-        block_ceiling=10**9,
-    )
-    routed = containment_pairs(
-        docs, "doc_id", "text", "lang", n=2, threshold=0.4,
-        block_ceiling=500,
-    )
-    d = {(r.id_a, r.id_b): (r.containment_ab, r.containment_ba)
-         for r in direct.collect()}
-    r = {(r.id_a, r.id_b): (r.containment_ab, r.containment_ba)
-         for r in routed.collect()}
-    assert len(d) > 0
     assert d == r

@@ -117,7 +117,7 @@ def main() -> int:
         metavar="K=V",
         help="session conf(s) to set before running keys (e.g. "
         "spark.mediaplaycounts.pairBlockCeiling=2000 to exercise the "
-        "production LSH fallback in a scale sweep)",
+        "production cosine LSH fallback in a scale sweep)",
     )
     ap.add_argument(
         "--json",

@@ -12,23 +12,25 @@ SF/CONF COMBINATION WHERE EACH ROUTE PROVABLY FIRES, asserting:
 1. the ROUTE (optimized-plan difference vs the default-conf build,
    plus a data-level witness: block rows > ceiling, bucket rows > cap,
    BroadcastHashJoin present/absent, checkpoint dir populated,
-   df-guard ValueError) — not just the result;
+   df-guard ValueError) — not just the result. For the exact n-gram
+   pair keys, which have one route, the witness is the opposite: a
+   block over the ceiling and an UNCHANGED plan;
 2. the RESULT, against the key's documented routing CONTRACT:
-   - exact routes (containment prefix-filter, broadcast gate,
-     reliable checkpoints, inverted-index df guard): routed ==
-     default == DuckDB oracle, value-exact;
-   - approximate routes (MinHash-LSH block fallback, band-bucket star
-     cap, random-hyperplane cosine fallback): precision 1.0 HARD
-     (routed pairs ⊆ default pairs with identical scores) + the
-     route's constructed recall floor HARD + full divergence REPORTED
-     (so "approximate" is a measured number, never a shrug).
+   - exact routes (n-gram Jaccard/containment pairs and their
+     clusters, broadcast gate, reliable checkpoints, inverted-index df
+     guard): routed == default == DuckDB oracle, value-exact;
+   - approximate routes (band-bucket star cap, random-hyperplane
+     cosine fallback): precision 1.0 HARD (routed pairs ⊆ default
+     pairs with identical scores) + the route's constructed recall
+     floor HARD + full divergence REPORTED (so "approximate" is a
+     measured number, never a shrug).
 
 Cells: `production` (the documented production conf — at sf0.1 the en
-lang block, 2059 rows, exceeds pairBlockCeiling=2000, so the LSH
-fallback genuinely fires inside dedup_ngram_jaccard / dedup_clusters /
-pipeline_e2e_curation); `ceiling_fire` (ceiling=100: every lang AND
-label block routes); `bandcap_fire` (cap=64 < measured max bucket 136);
-`broadcast_off`/`broadcast_all`; `checkpoint`; `maxdf_guard`.
+lang block, 2059 rows, exceeds pairBlockCeiling=2000);
+`ceiling_fire` (ceiling=100: every lang AND label block exceeds it, so
+the cosine fallback fires); `bandcap_fire` (cap=64 < measured max
+bucket 136); `broadcast_off`/`broadcast_all`; `checkpoint`;
+`maxdf_guard`.
 
 Usage:
     python tools/conf_matrix.py [--sf /root/testdata/sf0.1] [--cells a,b]
@@ -38,6 +40,7 @@ Exit nonzero on any HARD contract violation or unproven route.
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 import time
 
@@ -147,36 +150,6 @@ def c_pairs(score: str, recall_floor: float, hi_cut: float):
     return check
 
 
-def c_cluster(floor: float, id_col: str = "doc_id", label_col: str = "cluster_rep"):
-    """Cluster route: per-doc assignment agreement >= floor HARD;
-    exactness reported. Columns selected BY NAME (ADVICE r9: the old
-    first/last positional pick silently mis-pairs if the key's schema
-    is ever reordered or widened) — a missing column fails loudly."""
-
-    def check(routed, default, oracle):
-        missing = {id_col, label_col} - set(default.columns)
-        if missing:
-            return False, (
-                f"cluster contract expects columns {sorted(missing)} "
-                f"absent from result schema {list(default.columns)}"
-            )
-        idc, lc = id_col, label_col
-        r = dict(zip(routed[idc], routed[lc]))
-        d = dict(zip(default[idc], default[lc]))
-        if set(r) != set(d):
-            return False, f"doc set differs: {len(set(r) ^ set(d))} docs"
-        agree = sum(1 for k in d if r[k] == d[k])
-        frac = agree / len(d) if d else 1.0
-        if frac < floor:
-            return False, f"cluster agreement {frac:.4f} < floor {floor}"
-        return True, (
-            f"cluster agreement {agree}/{len(d)} ({frac:.4f})"
-            + ("; EXACT" if agree == len(d) else "")
-        )
-
-    return check
-
-
 def c_dup_assign(routed, default, oracle):
     """dedup_embedding_cosine: (vec_id, dup_of=min close neighbor).
     Routed pair set ⊆ default ⇒ routed vec_ids ⊆ default AND each
@@ -228,72 +201,11 @@ def c_minhash_summary(routed, default, oracle):
     return True, f"twin exact ({n_r} pairs == oracle); within_bound={wb}"
 
 
-def c_pairs_precision_cluster(routed, default, oracle):
-    """ngram pairs under ceiling+cap BOTH firing. HARD contract:
-    precision (subset with identical jaccard) AND zero connectivity
-    loss — the star cap has NO pair-recall floor (a pair can live
-    entirely inside over-cap buckets), but chain-repair
-    (operators/dedup._star_candidates_with_repair) is UNCONDITIONAL as
-    of r11 (VERDICT r10 next #2): peel rounds shrink the failed set
-    while it is large, then an exact all-pairs tail over the
-    per-bucket residue gives every cohesive pair a direct candidate,
-    raising loudly only for a residue beyond starRepairAllPairsCap —
-    so zero lost nodes is a guarantee the code actually provides for
-    ANY bucket composition (the r10 version only covered stacks <= 3
-    deep — ADVICE r10 medium; the interim peel-until-empty version
-    needed O(bucket) Spark jobs on the stranger piles THIS cell's
-    corpus contains). A lost node here is therefore always a
-    regression. Label agreement is still reported."""
-    r, d = _pair_sets(routed, "jaccard"), _pair_sets(default, "jaccard")
-    extra = set(r) - set(d)
-    if extra:
-        return False, f"PRECISION violated: {len(extra)} non-default pairs"
-    bad = [k for k in r if abs(r[k] - d[k]) > 1e-9]
-    if bad:
-        return False, f"score mismatch on {len(bad)} routed pairs"
-
-    def components(pairs):
-        parent = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {x: find(x) for x in parent}
-
-    cr, cd = components(set(r)), components(set(d))
-    lost_nodes = len(set(cd) - set(cr))
-    agree = sum(1 for x in cd if cr.get(x) == cd[x])
-    rec = len(r) / len(d) if d else 1.0
-    if lost_nodes:
-        return False, (
-            f"CONNECTIVITY violated: {lost_nodes} of {len(cd)} paired "
-            "docs lost all links under the cap — chain-repair should "
-            "have re-starred them"
-        )
-    return True, (
-        f"precision 1.0 ({len(r)} pairs); recall {rec:.4f} (no floor "
-        f"under cap); connectivity 0 lost of {len(cd)} paired docs, "
-        f"label agreement {agree}/{len(cd)}"
-    )
-
-
 CONTRACTS = {
-    # ngram LSH fallback: banding derived at threshold 0.05 -> r=1/b=59,
-    # recall >= 1-(0.95)^59 ~ 0.952 at J=0.05 by construction and
-    # ~1-1e-9 at J>=0.3 (hi_cut).
-    "dedup_ngram_jaccard": c_pairs("jaccard", 0.95, 0.3),
-    # clusters inherit the same pair recall; components can only merge
-    # identically or split when a pair is missed — 0.99 floor, exactness
-    # reported.
-    "dedup_clusters": c_cluster(0.99),
-    "text_containment_pairs": c_exact,  # prefix-filter route is EXACT
+    # one exact route (inverted shingle index) at every block size
+    "dedup_ngram_jaccard": c_exact,
+    "dedup_clusters": c_exact,
+    "text_containment_pairs": c_exact,
     # RH-LSH fallback (8 tables x 8 planes, Hamming<=2 MULTI-PROBE as
     # of r11 — VERDICT r10 next #1): per-table collision at cos c with
     # q = 1-acos(c)/pi is sum_{k<=2} C(8,k) q^(8-k) (1-q)^k; recall =
@@ -306,11 +218,7 @@ CONTRACTS = {
     "sim_cosine_pairs": c_pairs("cos_sim", 0.85, 0.999999),
     "dedup_embedding_cosine": c_dup_assign,
     "sim_threshold_sweep": c_counts_le,
-    # e2e near-dedup runs at threshold 0.6 -> banding (88, 4): recall
-    # 0.95 at J=0.6, ~1 at J>=0.8; corpus near-dups are exact-ish
-    # (J ~ 1), so the end-to-end manifest is expected EXACT — asserted
-    # exact, and if a legit sub-0.8 near-dup ever enters the corpus
-    # this line is the documented relaxation point.
+    # its near-dedup stage is the exact ngram_jaccard_pairs route
     "pipeline_e2e_curation": c_exact,
     "dedup_near_minhash": c_minhash_summary,
     # star cap preserves cluster connectivity by construction
@@ -324,7 +232,10 @@ CONTRACTS = {
 
 
 def _plan(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+    """Optimized plan with expression ids and lambda-variable suffixes
+    masked (global counters), so two builds of one query compare equal."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"(x_\d+)?#\d+L?", "#", plan)
 
 
 def _sparkplan(df) -> str:
@@ -347,34 +258,43 @@ def _with_conf(spark, confs: dict):
     return _Ctx()
 
 
-def prove_ceiling(spark, sf, qs, confs) -> tuple[bool, str]:
+def _ngram_plan_unchanged(spark, sf, qs, confs) -> tuple[bool, str]:
+    """Witness for the exact n-gram pair keys: a doc block exceeds the
+    ceiling, yet the dedup_ngram_jaccard plan is the default one."""
     from pyspark.sql import functions as F
 
     ceiling = int(confs["spark.mediaplaycounts.pairBlockCeiling"])
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    em = spark.read.parquet(f"{sf}/embeddings.parquet")
     dmax = docs.groupBy("lang").count().agg(F.max("count")).head()[0]
-    emax = em.groupBy("label").count().agg(F.max("count")).head()[0]
-    doc_fires, emb_fires = dmax > ceiling, emax > ceiling
-    if not doc_fires:
+    if dmax <= ceiling:
         return False, f"no doc block over ceiling {ceiling} (max {dmax})"
     p_def = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-    c_routed = None
     with _with_conf(spark, confs):
         p_rt = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-        if emb_fires:
-            c_routed = _plan(qs["sim_cosine_pairs"](spark, sf))
-    if p_rt == p_def:
-        return False, "ngram optimized plan UNCHANGED under ceiling conf"
-    msg = f"doc max block {dmax} > {ceiling}, ngram plan diverged"
-    if emb_fires:
-        c_def = _plan(qs["sim_cosine_pairs"](spark, sf))
-        if c_routed == c_def:
-            return False, "cosine plan UNCHANGED though label block fires"
-        msg += f"; emb max block {emax} > {ceiling}, cosine plan diverged"
-    else:
-        msg += f"; emb max block {emax} <= {ceiling} (cosine route idle)"
-    return True, msg
+    if p_rt != p_def:
+        return False, "ngram optimized plan CHANGED under ceiling conf"
+    return True, f"doc max block {dmax} > {ceiling}, ngram plan unchanged"
+
+
+def prove_ceiling(spark, sf, qs, confs) -> tuple[bool, str]:
+    from pyspark.sql import functions as F
+
+    ok, msg = _ngram_plan_unchanged(spark, sf, qs, confs)
+    if not ok:
+        return ok, msg
+    ceiling = int(confs["spark.mediaplaycounts.pairBlockCeiling"])
+    em = spark.read.parquet(f"{sf}/embeddings.parquet")
+    emax = em.groupBy("label").count().agg(F.max("count")).head()[0]
+    if emax <= ceiling:
+        return False, f"no label block over ceiling {ceiling} (max {emax})"
+    c_def = _plan(qs["sim_cosine_pairs"](spark, sf))
+    with _with_conf(spark, confs):
+        c_routed = _plan(qs["sim_cosine_pairs"](spark, sf))
+    if c_routed == c_def:
+        return False, "cosine plan UNCHANGED though label block fires"
+    return True, (
+        f"{msg}; emb max block {emax} > {ceiling}, cosine plan diverged"
+    )
 
 
 def prove_bandcap(spark, sf, qs, confs) -> tuple[bool, str]:
@@ -471,81 +391,14 @@ def prove_maxdf(spark, sf, qs, confs) -> tuple[bool, str]:
     return True, "maxDf=1 raises the df guard (conf live); cell value 4096 no-op"
 
 
-def prove_ceiling_cap(spark, sf, qs, confs) -> tuple[bool, str]:
-    """Both knobs must fire INSIDE the routed LSH path: blocks over the
-    ceiling route through _lsh_candidate_pairs, and within that path at
-    least one (blk, band_idx, band_hash) bucket of the r=1/b=59 banding
-    (derived at the 0.05 ngram threshold) exceeds the cap, so star
-    routing engages. Witnesses: both data-level maxima + the plan under
-    {ceiling} differing from the plan under {ceiling, cap}."""
-    from pyspark.sql import functions as F
-
-    from mediaplaycounts_spark.operators import dedup as D
-    from mediaplaycounts_spark.tables import load_table
-
-    ceiling = int(confs["spark.mediaplaycounts.pairBlockCeiling"])
-    cap = int(confs["spark.mediaplaycounts.bandBucketCap"])
-    docs = load_table(spark, sf, "documents")
-    dmax = docs.groupBy("lang").count().agg(F.max("count")).head()[0]
-    if dmax <= ceiling:
-        return False, f"no doc block over ceiling {ceiling} (max {dmax})"
-    nh, r = D._banding_params(0.05)
-    sh = docs.select(
-        "doc_id", F.col("lang").alias("blk"), D.shingles("text", 2).alias("s")
-    )
-    sig = F.array(
-        *[
-            F.array_min(F.transform("s", lambda x, k=k: F.xxhash64(x, F.lit(k))))
-            for k in range(nh)
-        ]
-    )
-    bmax = (
-        sh.select("blk", F.posexplode(sig).alias("i", "h"))
-        .groupBy("blk", "i", "h")
-        .count()
-        .agg(F.max("count"))
-        .head()[0]
-    )
-    if bmax <= cap:
-        return False, f"no r=1 band bucket over cap {cap} (max {bmax})"
-    with _with_conf(
-        spark,
-        {"spark.mediaplaycounts.pairBlockCeiling": str(ceiling)},
-    ):
-        p_ceiling_only = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-    with _with_conf(spark, confs):
-        p_both = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-    if p_both == p_ceiling_only:
-        return False, "cap conf did not change the ROUTED plan"
-    return True, (
-        f"doc max block {dmax} > {ceiling} AND max r=1 bucket {bmax} > "
-        f"{cap}; routed plan diverges ceiling-only vs ceiling+cap"
-    )
-
-
 def prove_production(spark, sf, qs, confs) -> tuple[bool, str]:
-    from pyspark.sql import functions as F
-
-    ceiling = int(confs["spark.mediaplaycounts.pairBlockCeiling"])
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    over = (
-        docs.groupBy("lang").count().filter(F.col("count") > ceiling).count()
-    )
-    if over == 0:
-        return False, (
-            f"production ceiling {ceiling} fires on NO block at this SF — "
-            "run at an SF where it does (sf0.1: en=2059)"
+    ok, msg = _ngram_plan_unchanged(spark, sf, qs, confs)
+    if not ok:
+        return ok, msg + (
+            " — run at an SF where the production ceiling fires "
+            "(sf0.1: en=2059)"
         )
-    p_def = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-    with _with_conf(spark, confs):
-        p_rt = _plan(qs["dedup_ngram_jaccard"](spark, sf))
-    if p_rt == p_def:
-        return False, "ngram plan UNCHANGED under production conf"
-    return True, (
-        f"{over} lang block(s) over production ceiling {ceiling}; "
-        "ngram plan diverged (cap/cosine/maxdf routes idle at this SF — "
-        "covered by their fire cells)"
-    )
+    return True, msg + " (cap/cosine/maxdf routes covered by their fire cells)"
 
 
 # ----------------------------------------------------------------- cells
@@ -563,23 +416,6 @@ CELLS = {
         {"spark.mediaplaycounts.bandBucketCap": "64"},
         BANDCAP_KEYS,
         prove_bandcap,
-    ),
-    # ceiling AND cap firing TOGETHER — the ngram keys' routed-LSH path
-    # with star routing engaged inside it. Under the cap no pair-recall
-    # floor exists (star drops member-member pairs of over-cap buckets,
-    # at any J), so these keys swap to the precision+cluster contract.
-    # cap=4: the r=1 banding's over-cap buckets on this corpus are the
-    # exact-dup families (max bucket 6 at sf0.1 — unlike the (64,2)
-    # banding's 136, an r=1 bucket needs the doc's MINIMUM hash to
-    # collide, which for non-near-dup docs happens at ~their Jaccard).
-    "ceiling_cap_fire": (
-        {
-            "spark.mediaplaycounts.pairBlockCeiling": "100",
-            "spark.mediaplaycounts.bandBucketCap": "4",
-        },
-        ["dedup_ngram_jaccard", "dedup_clusters"],
-        prove_ceiling_cap,
-        {"dedup_ngram_jaccard": c_pairs_precision_cluster},
     ),
     "broadcast_off": (
         {
@@ -637,8 +473,7 @@ def main() -> int:
 
     n_pass = n_fail = 0
     for cell in args.cells.split(","):
-        confs, keys, prove, *rest = CELLS[cell]
-        overrides = rest[0] if rest else {}
+        confs, keys, prove = CELLS[cell]
         print(f"\n=== cell {cell}: {confs}")
         ok, msg = prove(spark, args.sf, qs, confs)
         print(f"{'✓' if ok else '✗'} route-proof: {msg}")
@@ -652,7 +487,7 @@ def main() -> int:
                     routed = qs[k](spark, args.sf).toPandas()
                 d = default_of(k)
                 o = oracle_of(k)
-                contract = overrides.get(k) or CONTRACTS.get(k, c_exact)
+                contract = CONTRACTS.get(k, c_exact)
                 ok, msg = contract(routed, d, o)
             except Exception as ex:
                 ok, msg = False, f"ERROR {type(ex).__name__}: {str(ex)[:300]}"

@@ -68,8 +68,9 @@ EXPENSIVE = [
 #: (key, condition-substring) pairs reviewed and accepted, with the
 #: reason. Keep this SHORT — the rule is to fix, not allowlist.
 _GUARD_WHY = (
-    "the r8 algebraic guard (operators/dedup.py::_jaccard_verify /"
-    " _containment_verify): deliberately ONE intersect occurrence in the"
+    "the r8 algebraic guard of the MinHash verify"
+    " (operators/dedup.py::_jaccard_verify): deliberately ONE intersect"
+    " occurrence in the"
     " condition pruning ~80% of candidates before the barrier exchange;"
     " the exact division runs above the aggregate barrier. Measured"
     " aged-JVM-stable: sf3 aged CPU 2535->792 s after this exact shape"
@@ -78,9 +79,7 @@ _GUARD_WHY = (
 )
 ALLOWLIST: dict[tuple[str, str], str] = {
     ("dedup_near_minhash", "array_intersect"): _GUARD_WHY,
-    ("dedup_ngram_jaccard", "array_intersect"): _GUARD_WHY,
     ("prod_minhash_pairs", "array_intersect"): _GUARD_WHY,
-    ("text_containment_pairs", "array_intersect"): _GUARD_WHY,
 }
 
 

@@ -6,12 +6,9 @@ growth is real work, not JVM history).
 The registered key stacks four plan families in one lineage:
   lsh      production MinHash path (threshold=0.05, recall_point=0.3
            -> 64 hashes / r=2 / b=32), the thing that runs at 100 TB
-  exact05  grading twin: ngram_jaccard_pairs(blk=const, t=0.05) — under
-           the prod conf (pairBlockCeiling=2000) the one corpus-wide
-           block routes through _lsh_candidate_pairs with
-           _banding_params(0.05) = r=1 / b=59
-  exact03  grading twin at t=0.3 — routes with _banding_params(0.3)
-           = r=2 / b=32
+  exact05  grading twin: blockless ngram_jaccard_pairs(t=0.05) — the
+           exact inverted shingle index, the same route under any conf
+  exact03  grading twin at t=0.3, same route
   grading  n_fp anti-join, n_hit semi-join, crossJoin summary
 
 This probe runs ONE sf per process invocation (fresh JVM per leg — the
@@ -83,7 +80,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", required=True)
     ap.add_argument("--best-of", type=int, default=2)
-    ap.add_argument("--ceiling", type=int, default=2000)
     ap.add_argument("--cap", type=int, default=256)
     args = ap.parse_args()
 
@@ -96,7 +92,6 @@ def main() -> None:
             "spark.ui.retainedStages": "100000",
         }
     )
-    spark.conf.set("spark.mediaplaycounts.pairBlockCeiling", str(args.ceiling))
     spark.conf.set("spark.mediaplaycounts.bandBucketCap", str(args.cap))
     # Loud-failure linearity guard on the exact twins (ADVICE r8): the
     # probe runs beyond graded SFs, exactly where a df-skewed corpus
