@@ -5,7 +5,9 @@ A user of ``harej/mediaplaycounts`` queries it through
 (Flask routes ``/api/1/FilePlaycount/...``, ``/api/1/CategoryPlaycount/...``).
 This package re-expresses that exact query surface over the playcount
 fact DataFrame so a reference user can switch engines and keep their
-call sites.
+call sites. Spark runs each request's pruned read; the driver sums and
+zero-fills the series in ``to_api_payload``, whose one collect holds at
+most one row per day in the span (``api.playcounts``).
 """
 
 from mediaplaycounts_spark.api.http import create_app, serve  # noqa: F401

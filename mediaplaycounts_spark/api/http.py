@@ -17,9 +17,13 @@ WSGI container. Dates accept ISO (2024-01-31) and compact (20240131)
 forms. Responses are ``to_api_payload`` JSON — {total, counts:
 [[date, n], ...]} — the reference's shape.
 
-The Spark side stays one declarative plan per request (pruned scan +
-broadcast spine join; category adds one broadcast semi-join); the only
-collect is the tiny per-day series in ``to_api_payload``.
+Each request runs the pruned read in Spark and builds the zero-filled
+series on the driver (``api.playcounts``): one job for a file request,
+whose collect holds at most one row per day in the span; a category
+request adds a broadcast semi-join and a per-day sum, so its collect has
+the same bound. A start after the end is a 400. The app calls the
+``api.playcounts`` functions through this module's namespace, so they
+can be wrapped from outside (the benchmark's tracer does).
 """
 
 from __future__ import annotations
@@ -62,7 +66,8 @@ def create_app(
     optional category-membership snapshot.
 
     ``today`` pins the last_30/last_90 anchor for deterministic tests;
-    None means the current date at request time (production behavior).
+    None means the current UTC date at request time (production
+    behavior): the store's days are UTC dump dates.
     """
 
     def respond(start_response, status: str, body: dict) -> Iterable[bytes]:
@@ -110,7 +115,7 @@ def create_app(
             else:
                 n = 30 if action == "last_30" else 90
                 name = rest
-                anchor = today or _dt.date.today().isoformat()
+                anchor = today or _dt.datetime.now(_dt.timezone.utc).date().isoformat()
                 if is_category:
                     series = category_last_n(playcounts, members, name, n, anchor)
                 else:

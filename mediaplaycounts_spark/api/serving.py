@@ -11,7 +11,10 @@ partition overwrite = the per-date DELETE+INSERT) or
 :func:`write_serving_jdbc` (the serve-side database the reference
 actually queried), and the API side re-opens it with the readers here —
 whose outputs plug directly into ``api.playcounts.date_range`` /
-``last_n`` / ``category_*`` and ``api.http.create_app``.
+``last_n`` / ``category_*`` and ``api.http.create_app``. Those run only
+the pruned read below in Spark and zero-fill the series on the driver;
+since ``write_daily`` stores the per-(file, day) rollup, a file request
+collects at most one row per day in its span.
 
 Scale posture: the parquet path is the 100 TB default — ``date_range``'s
 date predicates prune to the queried day partitions (asserted in

@@ -384,8 +384,8 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     proprietary formats) when no JVM connector exists; partition
     planning keeps the read parallel like any native source.
 
-    The calendar itself is the date-spine utility every date_range
-    query needs (REF GetData::date_range zero-fill, SURVEY.md §3.2)."""
+    The calendar itself is the day list every date_range query
+    zero-fills over (REF GetData::date_range, SURVEY.md §3.2)."""
     import datetime as dt
 
     from pyspark.sql.datasource import (
@@ -1192,7 +1192,7 @@ def scan_category_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 ALL_DAYS_GLOB = f"{FIXTURE_DIR}/mediacounts.2024-01-0[123].v00.tsv"
 
 #: Probe titles for the serving read-back: two real files (multi-day
-#: series + one zero-filled spine day past the data) and the file whose
+#: series + one zero-filled day past the data) and the file whose
 #: ONLY appearance is day 3's truncated line — its all-zero series is
 #: the end-to-end proof that corrupt routing kept it out of the store.
 _E2E_PROBES = ("Accordion solo.ogg", "Dance clip.webm", "Truncated.webm")
@@ -1263,17 +1263,21 @@ def pipeline_e2e_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reach the serving store — probe 3 ("Truncated.webm", whose
     sole appearance is the truncated line) comes back as an all-zero
     series; (b) the double write is idempotent under dynamic partition
-    overwrite — day 1 is loaded twice yet counts once; (c) the spine
+    overwrite — day 1 is loaded twice yet counts once; (c) the span
     extends one day past the data, so zero-fill is value-checked at
     the API boundary, not just in unit tests.
 
     Scale: identical posture to the per-stage keys it composes — one
     map-side-combined (file, date) aggregation is the only shuffle on
     the write path; the serving read is partition-pruned per API query
-    (asserted in tests/test_api_serving.py); each probe series is a
-    broadcast spine join. 100 TB = more days and files, same plan.
+    (asserted in tests/test_api_serving.py); each probe series is the
+    API's own payload — one pruned read, zero-filled on the driver —
+    so the returned frame is the three payloads as a local table.
+    100 TB = more days and files, same plan.
     """
-    from mediaplaycounts_spark.api.playcounts import date_range
+    import datetime as dt
+
+    from mediaplaycounts_spark.api.playcounts import date_range, to_api_payload
     from mediaplaycounts_spark.api.serving import read_serving_parquet
     from mediaplaycounts_spark.session import configure
 
@@ -1294,15 +1298,11 @@ def pipeline_e2e_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_daily(pc, out)  # nightly re-run: replaces day 1 in place, adds days 2-3
 
     serving = read_serving_parquet(spark, out)
-    series = [
-        date_range(serving, p, "2024-01-01", "2024-01-04")
-        .select(F.lit(p).alias("file"), "date", "count")
+    rows = [
+        (p, dt.datetime.fromisoformat(day), n)
         for p in _E2E_PROBES
+        for day, n in to_api_payload(
+            date_range(serving, p, "2024-01-01", "2024-01-04")
+        )["counts"]
     ]
-    merged = series[0]
-    for s in series[1:]:
-        merged = merged.unionByName(s)
-    return merged.select(
-        "file", F.col("date").cast("timestamp_ntz").alias("date"),
-        F.col("count").cast("long").alias("count"),
-    )
+    return spark.createDataFrame(rows, "file string, date timestamp_ntz, count long")

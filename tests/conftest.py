@@ -29,7 +29,7 @@ def spark():
 @pytest.fixture(scope="session")
 def playcounts_fixture(spark):
     """3 files x 100 days, count = day index (closed-form sums);
-    'gappy.ogv' missing every 3rd day (spine zero-fill case)."""
+    'gappy.ogv' missing every 3rd day (zero-fill case)."""
     rows = []
     d0 = dt.date(2024, 1, 1)
     for i in range(100):

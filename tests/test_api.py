@@ -31,7 +31,7 @@ def test_underscore_normalization(spark, playcounts_fixture):
 
 
 def test_zero_fill_gap_days(spark, playcounts_fixture):
-    # gappy.ogv missing every 3rd day; spine emits those days with 0
+    # gappy.ogv missing every 3rd day; the payload zero-fills those days
     out = to_api_payload(
         date_range(playcounts_fixture, "gappy.ogv", "2024-01-01", "2024-01-07")
     )
@@ -127,6 +127,11 @@ def test_http_category_routes(spark, playcounts_fixture, members_fixture):
     status, out = _call(app, "/api/1/CategoryPlaycount/last_90/Cat B")
     assert status == "200 OK"
     assert len(out["counts"]) == 90
+    # a reversed span is the client's error, not an empty series
+    status, out = _call(
+        app, "/api/1/CategoryPlaycount/date_range/Cat_A/2024-01-03/2024-01-01"
+    )
+    assert status == "400 Bad Request" and "after" in out["error"]
 
 
 def test_http_error_routes(spark, playcounts_fixture):
@@ -142,6 +147,75 @@ def test_http_error_routes(spark, playcounts_fixture):
         _call(app, "/api/1/CategoryPlaycount/last_30/Cat A")[0]
         == "503 Service Unavailable"
     )
+    status, out = _call(app, "/api/1/FilePlaycount/date_range/a.ogg/2024-01-05/2024-01-01")
+    assert status == "400 Bad Request" and "after" in out["error"]
+
+
+def test_http_unpinned_today_is_the_utc_date(spark, playcounts_fixture, monkeypatch):
+    """Without a pinned ``today``, last_30/last_90 end the day before the
+    UTC date — the store's days are UTC dump dates — whatever the
+    server's local zone. UTC+14 and UTC-12 between them differ from the
+    UTC date at every hour, so a local-date anchor fails one of them."""
+    import datetime as dt
+    import os
+    import time
+
+    from mediaplaycounts_spark.api import create_app, http
+
+    anchors, real = [], http.last_n
+    monkeypatch.setattr(
+        http, "last_n", lambda pc, f, n, today: anchors.append(today) or real(pc, f, n, today)
+    )
+    app = create_app(playcounts_fixture)
+    saved = os.environ.get("TZ")
+    try:
+        for zone in ("Pacific/Kiritimati", "Etc/GMT+12"):
+            os.environ["TZ"] = zone
+            time.tzset()
+            before = dt.datetime.now(dt.timezone.utc).date().isoformat()
+            assert _call(app, "/api/1/FilePlaycount/last_30/a.ogg")[0] == "200 OK"
+            after = dt.datetime.now(dt.timezone.utc).date().isoformat()
+            assert anchors[-1] in (before, after), (zone, anchors[-1], before)
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+
+def test_perfbench_trace_hook_wraps_every_api_name(spark):
+    """perfbench/loop.py's traced runs wrap the five API names in
+    ``api.http``'s namespace; a missing name would raise AttributeError
+    there. Apply the hook and check that each name is wrapped and then
+    restored."""
+    import importlib
+    import pathlib
+    import sys
+
+    from mediaplaycounts_spark.api import http
+
+    bench = str(pathlib.Path(__file__).resolve().parent.parent / "perfbench")
+    names = ("date_range", "last_n", "category_date_range", "category_last_n",
+             "to_api_payload")
+    mods = ("loop", "spans", "gen")  # perfbench's top-level module names
+    shadowed = {m: sys.modules.pop(m) for m in mods if m in sys.modules}
+    sys.path.insert(0, bench)
+    try:
+        loop = importlib.import_module("loop")
+        spans = importlib.import_module("spans")
+        before = {n: getattr(http, n) for n in names}
+        restore = loop._patch_http(spans.Tracer(spark, enabled=False))
+        try:
+            assert all(getattr(http, n) is not before[n] for n in names)
+        finally:
+            restore()
+        assert all(getattr(http, n) is before[n] for n in names)
+    finally:
+        sys.path.remove(bench)
+        for m in mods:
+            sys.modules.pop(m, None)
+        sys.modules.update(shadowed)
 
 
 def test_http_unexpected_error_returns_json_500(spark, playcounts_fixture):

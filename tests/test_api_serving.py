@@ -16,6 +16,7 @@ import pytest
 
 from mediaplaycounts_spark.api.playcounts import (
     category_date_range,
+    category_last_n,
     date_range,
     last_n,
     to_api_payload,
@@ -45,9 +46,9 @@ def served_jdbc(spark, playcounts_fixture):
     shutil.rmtree(db, ignore_errors=True)
 
 
-def _series(df):
-    # r["count"], not r.count — Row.count is the tuple method
-    return [(str(r["date"]), r["count"]) for r in df.collect()]
+def _series(series):
+    """The zero-filled per-day series the API serves."""
+    return [tuple(day) for day in to_api_payload(series)["counts"]]
 
 
 def test_date_range_against_parquet_serving_table(
@@ -66,8 +67,8 @@ def test_parquet_serving_scan_is_partition_pruned(spark, served_parquet):
     """The whole point of the day-partitioned layout: a 10-day API hit
     must scan 10 partitions, not the table's history."""
     served = read_serving_parquet(spark, served_parquet)
-    df = date_range(served, "Steady file.ogv", "2024-01-11", "2024-01-20")
-    physical = df._jdf.queryExecution().executedPlan().toString()
+    series = date_range(served, "Steady file.ogv", "2024-01-11", "2024-01-20")
+    physical = series.rows._jdf.queryExecution().executedPlan().toString()
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", physical)
@@ -113,8 +114,8 @@ def test_jdbc_read_pushes_filters(spark, served_jdbc):
     so the serve-side store prunes — REF GetData's parameterized SELECT
     shape."""
     served = read_serving_jdbc(spark, served_jdbc)
-    df = date_range(served, "gappy.ogv", "2024-01-01", "2024-01-07")
-    physical = df._jdf.queryExecution().executedPlan().toString()
+    series = date_range(served, "gappy.ogv", "2024-01-01", "2024-01-07")
+    physical = series.rows._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters:" in physical and "file" in physical.split(
         "PushedFilters:"
     )[1][:200]
@@ -135,3 +136,35 @@ def test_http_app_serves_from_serving_table(spark, served_parquet, members_fixtu
     assert status.startswith("200")
     assert body["total"] == sum(range(10, 20))
     assert body["counts"][0] == ["2024-01-11", 10]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through its job group."""
+    sc = spark.sparkContext
+    group = f"api-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count the jobs of one API request")
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_api_request_job_counts(spark, members_fixture, served_parquet):
+    """A file request is one Spark job (the pruned read; zero-fill is on
+    the driver). A category request adds the members broadcast and the
+    per-day sum's shuffle: at most three."""
+    served = read_serving_parquet(spark, served_parquet)
+    snap = pathlib.Path(".scratch") / f"members_{uuid.uuid4().hex[:12]}"
+    members_fixture.write.parquet(str(snap))
+    try:
+        members = spark.read.parquet(str(snap))
+        file_jobs = _jobs(spark, lambda: to_api_payload(
+            date_range(served, "Steady file.ogv", "2024-01-11", "2024-01-20")))
+        cat_jobs = _jobs(spark, lambda: to_api_payload(
+            category_last_n(served, members, "Cat A", 30, "2024-02-10")))
+    finally:
+        shutil.rmtree(snap, ignore_errors=True)
+    assert file_jobs == 1
+    assert 1 <= cat_jobs <= 3

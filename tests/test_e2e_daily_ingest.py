@@ -36,7 +36,7 @@ def series(spark):
 
 
 def test_series_shape_and_zero_fill(series):
-    """3 probes x 4 spine days; the no-data day (2024-01-04) is
+    """3 probes x 4 span days; the no-data day (2024-01-04) is
     zero-filled for every probe at the API boundary."""
     rows, _, _ = series
     assert len(rows) == 12
@@ -126,6 +126,6 @@ def test_serving_scan_prunes_to_queried_days(spark, series):
     assert len(new_stores) == 1, f"expected one fresh e2e store, got {new_stores}"
     serving = read_serving_parquet(spark, next(iter(new_stores)))
     q = date_range(serving, "Accordion solo.ogg", "2024-01-02", "2024-01-02")
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = q.rows._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "date" in m.group(1), plan

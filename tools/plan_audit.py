@@ -317,14 +317,12 @@ MAX_SHUFFLES = {
     # stages live behind the three checkpoint cuts and are audited via
     # their own per-stage keys.
     "pipeline_e2e_curation": 4,
-    # e2e daily ingest: the returned plan is the SERVING-read side only
-    # (the write path ran eagerly behind the store sink and is audited
-    # via agg_daily_playcount/sink_parquet_partitioned). 2 shuffles per
-    # probe x 3 probes: the per-file groupBy(date) defensive re-agg and
-    # the date_range API's orderBy — both over a partition-pruned,
-    # single-file frame of O(days-in-range) rows, invariant in corpus
-    # size.
-    "pipeline_e2e_daily_ingest": 6,
+    # e2e daily ingest: the write path ran eagerly behind the store sink
+    # (audited via agg_daily_playcount/sink_parquet_partitioned), and so
+    # did the three probes' date_range API reads — each one pruned,
+    # exchange-free read, zero-filled on the driver. The returned plan
+    # is their payloads as a local table: zero shuffles.
+    "pipeline_e2e_daily_ingest": 0,
     "agg_session_bounce_rate": 2,
     "join_temporal_scd2_asof": 1,
     "win_session_paths": 1,
