@@ -172,26 +172,6 @@ def _production_paths():
     )
 
 
-def _cpu_totals(sc) -> float:
-    """Cumulative executor CPU seconds over COMPLETE stages (REST).
-    Returns 0.0 when the UI is off (driver-provided vanilla session)."""
-    import urllib.request
-
-    base = sc.uiWebUrl
-    if base is None:
-        return 0.0
-    try:
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{base}/api/v1/applications/{sc.applicationId}"
-                "/stages?status=complete"
-            )
-        )
-        return sum(s.get("executorCpuTime", 0) for s in stages) / 1e9
-    except Exception:
-        return 0.0
-
-
 def _calibration(spark) -> dict[str, float]:
     """Machine-epoch fingerprint (VERDICT r8 next #7): consecutive
     idle-box sessions mode-flip 2.38<->4.64 s on the identical headline
@@ -323,6 +303,7 @@ def _normalize(total: float, timings: dict, calibration: dict, ref: dict):
 
 
 def main() -> None:
+    from mediaplaycounts_spark.profile import profile
     from mediaplaycounts_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -337,30 +318,31 @@ def main() -> None:
             "spark.ui.retainedStages": "100000",
         },
     )
-    sc = spark.sparkContext
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
 
-    def run(key: str, table=None) -> tuple[float, float]:
+    def run(key: str, table=None) -> tuple[float, float | None]:
         """(best wall, best cpu) over 3 runs — floors taken independently
         (identical plans mode-flip 1.4-3.6x in CPU under memory
         pressure; each metric's floor is its closest true-cost
-        observable, same rule as tools/paired_decade.py)."""
+        observable, same rule as tools/paired_decade.py). The profiled
+        region is the fn call plus the write for time_build keys, the
+        write alone otherwise. CPU is None when the UI is off."""
         table = table or qs
-        time_build = key in time_build_keys
-        df = table[key](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()  # warm-up
-        best = best_cpu = float("inf")
-        for _ in range(3):
-            c0 = _cpu_totals(sc)
-            t0 = time.perf_counter()
-            df = table[key](spark, SF_DIR)
-            if not time_build:
-                t0 = time.perf_counter()
-                c0 = _cpu_totals(sc)
+
+        def write(df) -> None:
             df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            best_cpu = min(best_cpu, _cpu_totals(sc) - c0)
-        return round(best, 4), round(max(best_cpu, 0.0), 4)
+
+        write(table[key](spark, SF_DIR))  # warm-up
+        profs = []
+        for _ in range(3):
+            if key in time_build_keys:
+                profs.append(profile(spark, key, lambda: write(table[key](spark, SF_DIR))))
+            else:
+                df = table[key](spark, SF_DIR)
+                profs.append(profile(spark, key, lambda: write(df)))
+        best = round(min(p.wall_s for p in profs), 4)
+        cpus = [p.cpu_s for p in profs]
+        return best, (None if None in cpus else round(min(cpus), 4))
 
     calibration = _calibration(spark)
     timings, cpu = {}, {}

@@ -112,9 +112,8 @@ def agg_date_range_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-range total per entity (REF GetData::date_range).
 
     The reference ran an indexed MySQL range scan per file; here the
-    date predicate is pushed into the parquet scan AS A RAW-NANOS RANGE
-    on the long ts column (events_between), so row groups actually
-    prune — a filter on the converted timestamp expression would not.
+    date predicate is pushed into the parquet scan as a range on the raw
+    ts column (events_between), so row groups actually prune.
     """
     ev = events_between(spark, sf_dir, "2024-01-10", "2024-01-21")
     return ev.groupBy("user_id").agg(

@@ -30,7 +30,7 @@ from mediaplaycounts_spark.streaming.jobs import (
     rocksdb_state_store,
     run_available_now,
 )
-from mediaplaycounts_spark.tables import load_table
+from mediaplaycounts_spark.tables import check_events_ts, load_table
 
 SCRATCH = pathlib.Path(__file__).resolve().parents[2] / ".scratch"
 
@@ -716,19 +716,15 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq.write_table(a_tbl, src / "a.parquet")
 
     schema = spark.read.parquet(str(src / "a.parquet")).schema
+    check_events_ts(schema)
 
     def run_once() -> None:
         stream = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "*.parquet")
             .parquet(str(src))
+            .withColumn("ts", F.col("ts").cast("timestamp"))
         )
-        if "bigint" == dict((f.name, f.dataType.simpleString()) for f in schema)["ts"]:
-            stream = stream.withColumn(
-                "ts", F.expr("timestamp_micros(ts div 1000)")
-            )
-        else:
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         agg = (
             stream.withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -747,13 +743,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_once()  # ingests on-time data; watermark = max(ts) - 2h persisted
     i = a_tbl.schema.get_field_index("ts")
-    if pa.types.is_integer(a_tbl.schema.field("ts").type):
-        # legacy TIMESTAMP(NANOS)-as-long layout: shift in raw nanos
-        late = pc.subtract(
-            a_tbl.column("ts"), pa.scalar(10 * 24 * 3600 * 10**9)
-        )
-    else:
-        late = pc.subtract(a_tbl.column("ts"), pa.scalar(dt.timedelta(days=10)))
+    late = pc.subtract(a_tbl.column("ts"), pa.scalar(dt.timedelta(days=10)))
     pq.write_table(a_tbl.set_column(i, "ts", late), src / "b.parquet")
     run_once()  # restores watermark; every b row is late -> dropped
 

@@ -9,9 +9,8 @@ Two entry points:
   graded query path calls this defensively (it is idempotent and cheap).
 
 Scale posture (SURVEY.md §4): AQE on everywhere (coalescing + skew-join
-handling), UTC session timezone so date math is deterministic and
-matches the DuckDB oracle, and the verified PySpark 4.1.2 workaround for
-nanosecond parquet timestamps (SURVEY.md §7 watch-list item 0).
+handling) and a UTC session timezone so date math is deterministic and
+matches the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -25,9 +24,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # Deterministic date/timestamp math, identical to the DuckDB oracle
     # which reads the same parquet as naive (UTC) timestamps.
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet stores TIMESTAMP(NANOS) which PySpark 4.1.2 refuses
-    # by default ([PARQUET_TYPE_ILLEGAL]); read as long and convert.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Adaptive execution: runtime shuffle-partition coalescing, skew-join
     # splitting, and plan re-optimization at stage boundaries.
     "spark.sql.adaptive.enabled": "true",

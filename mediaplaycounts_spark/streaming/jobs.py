@@ -18,9 +18,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mediaplaycounts_spark.session import configure
+from mediaplaycounts_spark.tables import check_events_ts
 
 #: Spark's embedded RocksDB state-store provider (rocksdbjni ships in the
 #: Spark distribution — no extra dependency).
@@ -69,30 +69,27 @@ def rocksdb_state_store(spark: SparkSession):
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events parquet (bounded replay source).
 
-    Layout detection mirrors the batch loader (tables.load_table): the
-    testdata has shipped ``ts`` both as TIMESTAMP(NANOS)-read-as-long and
-    as native ``timestamp[us]``. One batch read of the parquet footer
-    decides which conversion applies, so batch and stream can never
+    One batch read of the parquet footer fixes the stream's schema and
+    applies the batch loader's check (``tables.check_events_ts``): an
+    integer ``ts`` raises ``ValueError``, so batch and stream can never
     disagree about the timeline (tests/test_streaming.py parity guard).
+    ``ts`` is presented as TimestampType — watermarks need an instant
+    type; the session is pinned UTC so values equal the batch/oracle NTZ
+    view.
     """
     configure(spark)
     base = sf_dir.rstrip("/")
     # One-off footer read — schema only, no data scan.
     batch_schema = spark.read.parquet(f"{base}/events.parquet").schema
+    check_events_ts(batch_schema)
     # The streaming parquet source requires a directory path; point it
     # at sf_dir and glob-filter down to the events file.
-    raw = (
+    return (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(base)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    if isinstance(batch_schema["ts"].dataType, T.LongType):
-        # Legacy layout: TIMESTAMP(NANOS) surfaced as long nanos.
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # Native timestamp[us] (NTZ in the footer): present as TimestampType —
-    # watermarks need an instant type; the session is pinned UTC so values
-    # equal the batch/oracle NTZ view.
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def run_available_now(df: DataFrame, output_mode: str = "complete") -> DataFrame:

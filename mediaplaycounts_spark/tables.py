@@ -1,13 +1,13 @@
 """Table loaders for the driver-provided parquet testdata.
 
-All graded queries load through :func:`load_table` so the two verified
-gotchas are handled in exactly one place (SURVEY.md §7 watch-list):
+All graded queries load through :func:`load_table` so two invariants
+hold in exactly one place (SURVEY.md §7 watch-list):
 
-- ``events.ts`` is parquet TIMESTAMP(NANOS): read as long nanos
-  (``nanosAsLong``) and truncate to microseconds with integer division
-  (``ts div 1000`` — NOT float division, whose rounding could round *up*
-  near the next microsecond while DuckDB truncates), then present as
-  TIMESTAMP_NTZ to match DuckDB's naive microsecond timestamps.
+- ``events.ts`` is a native microsecond timestamp (parquet
+  ``timestamp[us]``, TIMESTAMP_NTZ in Spark), the type DuckDB's naive
+  microsecond timestamps compare with. A file whose ``ts`` is an integer
+  column (the old TIMESTAMP(NANOS)-as-long layout) raises ``ValueError``
+  instead of being converted silently.
 - Session timezone pinned UTC before any read.
 
 At 100 TB these loaders are where partition pruning starts: the fact
@@ -42,18 +42,30 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table with schema normalization.
+    """Load one testdata table.
 
-    ``events.ts`` arrives as TIMESTAMP_NTZ (microsecond, truncated from
-    nanos) — bit-identical to what the DuckDB oracle sees.
+    ``events.ts`` arrives as TIMESTAMP_NTZ (microsecond) — bit-identical
+    to what the DuckDB oracle sees; an integer ``ts`` raises
+    ``ValueError`` (:func:`check_events_ts`).
     """
     configure(spark)
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
-        )
+    if name == "events":
+        check_events_ts(df.schema)
     return df
+
+
+def check_events_ts(schema) -> None:
+    """Raise ``ValueError`` unless ``ts`` in an events schema is a
+    timestamp. An integer ``ts`` is the retired TIMESTAMP(NANOS)-as-long
+    layout; reading it as a timestamp would shift every event silently."""
+    ts = schema["ts"].dataType.simpleString()
+    if not ts.startswith("timestamp"):
+        raise ValueError(
+            f"events.ts is {ts}, expected a microsecond timestamp "
+            "(parquet timestamp[us]); the TIMESTAMP(NANOS)-as-long layout "
+            "is not supported"
+        )
 
 
 def events_between(
@@ -61,34 +73,14 @@ def events_between(
 ) -> DataFrame:
     """Events in [start_day, end_day_exclusive) with REAL scan pruning.
 
-    A filter on the *converted* ts column wraps the parquet column in
-    timestamp_micros(ts div 1000) — an expression parquet cannot prune
-    row groups with. At 100 TB that is a full scan. This helper pushes
-    the equivalent raw-nanosecond range predicate onto the long column
-    BEFORE conversion, so it lands in PushedFilters (and, on a
-    date-partitioned fact table, prunes partitions outright).
+    The range compares the raw parquet ``ts`` column with timestamp
+    literals, so it lands in PushedFilters and prunes row groups (and,
+    on a date-partitioned fact table, partitions outright).
     """
-    import datetime as _dt
-
-    configure(spark)
-
-    def _nanos(d: str) -> int:
-        dt = _dt.datetime.fromisoformat(d).replace(tzinfo=_dt.timezone.utc)
-        return int(dt.timestamp()) * 1_000_000_000
-
-    raw = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.filter(
-            (F.col("ts") >= _nanos(start_day)) & (F.col("ts") < _nanos(end_day_exclusive))
-        ).withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
-        )
-    else:  # µs-native files (driver layout since r1 regen)
-        raw = raw.filter(
-            (F.col("ts") >= F.lit(start_day).cast("timestamp_ntz"))
-            & (F.col("ts") < F.lit(end_day_exclusive).cast("timestamp_ntz"))
-        )
-    return raw
+    return load_table(spark, sf_dir, "events").filter(
+        (F.col("ts") >= F.lit(start_day).cast("timestamp_ntz"))
+        & (F.col("ts") < F.lit(end_day_exclusive).cast("timestamp_ntz"))
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -18,11 +18,9 @@ from tests.conftest import SF_SMOKE
 @pytest.fixture(scope="module")
 def events_pd():
     df = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
-    # mirror tables.load_table: nanos -> microsecond truncation
-    if pd.api.types.is_integer_dtype(df["ts"]):
-        df["ts"] = pd.to_datetime(df["ts"] // 1000, unit="us")
-    else:
-        df["ts"] = df["ts"].dt.floor("us")
+    # events.ts is timestamp[us]; floor keeps any finer unit pandas picks
+    # at microsecond precision, as tables.load_table sees it
+    df["ts"] = df["ts"].dt.floor("us")
     return df
 
 

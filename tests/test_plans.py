@@ -2,8 +2,8 @@
 
 SURVEY.md §4 claims each operator family gets specific Catalyst
 behavior (parquet predicate pushdown, column pruning, broadcast joins
-for dims, partial aggregation, TakeOrderedAndProject top-k, raw-nanos
-scan pruning). These tests pin those claims to the actual physical
+for dims, partial aggregation, TakeOrderedAndProject top-k, timestamp
+range scan pruning). These tests pin those claims to the actual physical
 plans so a refactor that silently degrades the plan (e.g. wrapping a
 pushable predicate in an opaque expression) fails CI, not a 100 TB run.
 
@@ -98,17 +98,15 @@ def test_events_range_prunes_native_us(spark):
     assert re.search(r"PushedFilters: \[.*LessThan\(ts,2024-01-12", plan)
 
 
-def test_events_range_prunes_on_raw_nanos(spark, tmp_path):
-    """Legacy TIMESTAMP(NANOS)-as-long layout: the ts range predicate must
-    hit PushedFilters as raw INT64 nanos; filtering after
-    timestamp_micros(ts div 1000) would scan everything. The driver
-    regenerated testdata as µs-native, so this branch gets its own tiny
-    bigint-ts fixture to stay covered (ADVICE r1)."""
+def test_events_bigint_ts_raises(spark, tmp_path):
+    """An events file whose ts is an integer column (the retired
+    TIMESTAMP(NANOS)-as-long layout) fails loudly in every reader — the
+    batch loader, the pruned range read and the stream — instead of
+    being converted or misread as a timestamp."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
-    from mediaplaycounts_spark.tables import events_between
+    from mediaplaycounts_spark.streaming.jobs import read_events_stream
+    from mediaplaycounts_spark.tables import events_between, load_table
 
     t0 = int(
         dt.datetime(2024, 1, 9, tzinfo=dt.timezone.utc).timestamp()
@@ -117,13 +115,13 @@ def test_events_range_prunes_on_raw_nanos(spark, tmp_path):
     df = spark.createDataFrame(rows, "event_id bigint, ts bigint")
     df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
 
-    out = events_between(spark, str(tmp_path), "2024-01-10", "2024-01-12")
-    plan = plan_of(out)
-    assert re.search(r"PushedFilters: \[.*GreaterThanOrEqual\(ts,17\d+", plan)
-    assert re.search(r"PushedFilters: \[.*LessThan\(ts,17\d+", plan)
-    # And the conversion is value-correct: 48 hourly rows in [10th, 12th).
-    assert out.count() == 48
-    assert dict(out.dtypes)["ts"] == "timestamp_ntz"
+    for read in (
+        lambda: load_table(spark, str(tmp_path), "events"),
+        lambda: events_between(spark, str(tmp_path), "2024-01-10", "2024-01-12"),
+        lambda: read_events_stream(spark, str(tmp_path)),
+    ):
+        with pytest.raises(ValueError, match="events.ts is bigint"):
+            read()
 
 
 # ------------------------------------------------------------- joins

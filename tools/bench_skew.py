@@ -49,6 +49,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
+from mediaplaycounts_spark.profile import profile, rest_json
+
 N_SALT = 32
 
 
@@ -126,66 +128,36 @@ def build_boilerplate_corpus(spark, n_docs: int, hot_share: float):
     return docs, n_hot
 
 
-def _completed_stage_ids(sc) -> set:
-    import urllib.request
-
-    base = sc.uiWebUrl
-    if base is None:  # UI disabled: gate mode must reach its own
-        return set()   # 'task stats unavailable' diagnostic (ADVICE r10)
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{sc.applicationId}"
-            "/stages?status=complete"
-        )
-    )
-    return {(s["stageId"], s["attemptId"]) for s in stages}
+def _task_quantiles(sc, stage: dict, quantiles: str) -> list[float]:
+    """Task executorRunTime quantiles of one profiled stage attempt."""
+    path = f"stages/{stage['stageId']}/{stage['attemptId']}/taskSummary?quantiles={quantiles}"
+    return rest_json(sc, path)["executorRunTime"]
 
 
-def _window_task_stats(sc, before: set) -> dict:
-    """Task-distribution stats over the stages completed since
-    ``before`` (one strategy's timing window): the BOTTLENECK stage's
-    max/p50 task executorRunTime — the LOAD-INSENSITIVE skew signal
-    (VERDICT r9 #6) — plus the window's total executorCpuTime as the
-    work-volume guard. Background load slows every task of a stage
-    roughly uniformly, so the WITHIN-STAGE max/p50 ratio survives
-    machine epochs that compress wall-clock speedups (r9: salted
-    1.24x mid-suite vs 1.81x isolated — same plans, same defense).
+def _window_task_stats(sc, prof) -> dict:
+    """Task-distribution stats over one strategy's profiled timing
+    window: the BOTTLENECK stage's max/p50 task executorRunTime — the
+    LOAD-INSENSITIVE skew signal (VERDICT r9 #6) — plus the window's
+    total executorCpuTime as the work-volume guard. Background load
+    slows every task of a stage roughly uniformly, so the WITHIN-STAGE
+    max/p50 ratio survives machine epochs that compress wall-clock
+    speedups (r9: salted 1.24x mid-suite vs 1.81x isolated — same
+    plans, same defense).
 
     Bottleneck = the stage whose LONGEST SINGLE TASK is the window
     maximum. Picking by total executorRunTime instead (first build)
     lands on the uniform 32-task exchange-write stage, whose summed
     runtime dwarfs the skewed join stage's one hot task — the metric
     read 1.48 on the undefended plain join. Wall-clock critical paths
-    follow the longest task, not the biggest stage sum."""
-    import urllib.request
+    follow the longest task, not the biggest stage sum.
 
-    base = sc.uiWebUrl
-    if base is None:  # ADVICE r10: with spark.ui.enabled=false this
-        return {}      # must degrade to the designed gate message,
-                       # not a TypeError before the JSON line prints
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{sc.applicationId}"
-            "/stages?status=complete"
-        )
-    )
-    window = [
-        s for s in stages if (s["stageId"], s["attemptId"]) not in before
-    ]
-    if not window:
-        return {}
+    Empty when the UI is off, so gate mode reaches its own 'task stats
+    unavailable' diagnostic (ADVICE r10)."""
     best = None
-    for s in window:
-        if s.get("numCompleteTasks", 0) < 2:
+    for s in prof.per_stage or []:
+        if s["numCompleteTasks"] < 2:
             continue
-        summary = json.load(
-            urllib.request.urlopen(
-                f"{base}/api/v1/applications/{sc.applicationId}/stages/"
-                f"{s['stageId']}/{s['attemptId']}/taskSummary"
-                "?quantiles=0.5,1.0"
-            )
-        )
-        p50, mx = summary["executorRunTime"]
+        p50, mx = _task_quantiles(sc, s, "0.5,1.0")
         if best is None or mx > best["task_run_ms_max"]:
             best = {
                 "stage_id": s["stageId"],
@@ -196,40 +168,18 @@ def _window_task_stats(sc, before: set) -> dict:
             }
     if best is None:
         return {}
-    best["window_cpu_s"] = round(
-        sum(s.get("executorCpuTime", 0) for s in window) / 1e9, 3
-    )
+    best["window_cpu_s"] = round(prof.cpu_s, 3)
     return best
 
 
-def _task_skew_summary(sc) -> dict:
-    """p50/p99 executorRunTime of the longest COMPLETE stage (the band
-    self-join under the boilerplate corpus) via the monitoring REST
-    API — the direct task-skew measurement VERDICT r6 next #2 asks for."""
-    import urllib.request
-
-    base = sc.uiWebUrl
-    if base is None:
+def _task_skew_summary(sc, prof) -> dict:
+    """p50/p99 executorRunTime of the profiled window's longest stage
+    (the band self-join under the boilerplate corpus) — the direct
+    task-skew measurement VERDICT r6 next #2 asks for."""
+    if not prof.per_stage:
         return {}
-    own = sc.applicationId
-    apps = json.load(urllib.request.urlopen(f"{base}/api/v1/applications"))
-    app_id = next(a["id"] for a in apps if a.get("id") == own)
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete"
-        )
-    )
-    if not stages:
-        return {}
-    heaviest = max(stages, key=lambda s: s.get("executorRunTime", 0))
-    summary = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages/"
-            f"{heaviest['stageId']}/{heaviest['attemptId']}/taskSummary"
-            "?quantiles=0.5,0.99"
-        )
-    )
-    p50, p99 = summary["executorRunTime"]
+    heaviest = max(prof.per_stage, key=lambda s: s["executorRunTime"])
+    p50, p99 = _task_quantiles(sc, heaviest, "0.5,0.99")
     return {
         "stage_id": heaviest["stageId"],
         "num_tasks": heaviest["numCompleteTasks"],
@@ -269,8 +219,9 @@ def band_join_bench(spark, n_docs: int, hot_share: float, cap: int, gate: bool):
     }
     connectivity = len(hot_linked) / max(n_hot - 1, 1)
 
-    t_uncapped = timed(pairs(None))
-    skew = _task_skew_summary(spark.sparkContext)
+    prof = profile(spark, "bench_skew:band_uncapped", lambda: timed(pairs(None)))
+    t_uncapped = prof.result
+    skew = _task_skew_summary(spark.sparkContext, prof)
     t_capped = timed(pairs(cap))
 
     out = {
@@ -348,13 +299,14 @@ def main() -> None:
     assert want == got, "salted join result diverges from plain join"
 
     sc = spark.sparkContext
+
+    def window(name: str, df) -> tuple[float, dict]:
+        prof = profile(spark, f"bench_skew:{name}", lambda: timed(df))
+        return prof.result, _window_task_stats(sc, prof)
+
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    snap = _completed_stage_ids(sc)
-    t_plain = timed(plain_join(fact, dim))
-    stats_plain = _window_task_stats(sc, snap)
-    snap = _completed_stage_ids(sc)
-    t_salted = timed(salted_join(fact, dim))
-    stats_salted = _window_task_stats(sc, snap)
+    t_plain, stats_plain = window("plain", plain_join(fact, dim))
+    t_salted, stats_salted = window("salted", salted_join(fact, dim))
 
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     # scale the skew-split thresholds to local data (defaults: 256 MB)
@@ -362,9 +314,7 @@ def main() -> None:
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
     )
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    snap = _completed_stage_ids(sc)
-    t_aqe = timed(plain_join(fact, dim))
-    stats_aqe = _window_task_stats(sc, snap)
+    t_aqe, stats_aqe = window("aqe", plain_join(fact, dim))
 
     print(
         json.dumps(

@@ -52,7 +52,8 @@ from tools.check_correctness import compare, duck_con  # noqa: E402
 
 CKPT_DIR = "/root/repo/.scratch/conf_matrix_ckpt"
 
-#: The documented production conf (BASELINE.md / SCALE.md).
+#: The production conf (BASELINE.md / SCALE.md), defined only here:
+#: ``paired_decade.py --prod`` and ``profile_key.py --prod`` apply it.
 PRODUCTION_CONF = {
     "spark.mediaplaycounts.pairBlockCeiling": "2000",
     "spark.mediaplaycounts.bandBucketCap": "256",

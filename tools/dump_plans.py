@@ -12,10 +12,8 @@ exchange reuse.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +29,7 @@ def main() -> None:
 
     from mediaplaycounts_spark.session import get_spark
     from mediaplaycounts_spark import registry
+    from mediaplaycounts_spark.profile import rest_json
     import __spark_entry__ as entrymod
 
     spark = get_spark(
@@ -52,13 +51,9 @@ def main() -> None:
         print(f"wrote {path} ({len(plan)} bytes)")
         if runtime:
             df.write.mode("overwrite").format("noop").save()
-            base = spark.sparkContext.uiWebUrl
-            app = spark.sparkContext.applicationId
-            sql = json.load(
-                urllib.request.urlopen(
-                    f"{base}/api/v1/applications/{app}/sql"
-                    "?details=true&planDescription=true&length=10000"
-                )
+            sql = rest_json(
+                spark.sparkContext,
+                "sql?details=true&planDescription=true&length=10000",
             )
             final = [
                 q

@@ -10,13 +10,17 @@ Usage:
     python tools/paired_decade.py --small /root/testdata/sf0.1 \
         --big .scratch/sf1 --factor 10 [--prod] [--best-of 1] key [key..]
 
---prod sets the production conf (pairBlockCeiling=2000) for the run.
+--prod applies tools/conf_matrix.PRODUCTION_CONF, the one definition of
+the production conf (pair-block ceiling, band-bucket cap, inverted-index
+maxDf guard and reliable checkpoints).
 Prints one JSON line per key:
   {"key": ..., "small_sec": ..., "big_sec": ..., "ratio": ...,
    "small_rows": ..., "big_rows": ..., "bound": ..., "allowed": ...,
    "flag": bool}
 where bound comes from tools/scale_ratios.COMPLEXITY_BOUNDS (default
-1.0 = linear) and allowed = factor * bound.
+1.0 = linear) and allowed = factor * bound; plus the CPU fields with
+--cpu and the spill fields with --spill. Each run is profiled by
+mediaplaycounts_spark.profile.
 """
 
 from __future__ import annotations
@@ -28,36 +32,21 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from mediaplaycounts_spark.profile import profile  # noqa: E402
+
 
 def _run(qs, key, sf_dir, spark):
-    # time from BEFORE the callable: keys with eager checkpoint_df
-    # lineage cuts do most of their work at construction time, and a
-    # count()-only timer would measure a scan of the materialized RDD
-    t0 = time.perf_counter()
-    df = qs[key](spark, sf_dir)
-    n = df.count()
-    return time.perf_counter() - t0, n
+    """One profiled run: the build and a count(). Timed from BEFORE the
+    callable: keys with eager checkpoint_df lineage cuts do most of
+    their work at construction time, and a count()-only timer would
+    measure a scan of the materialized RDD."""
+    return profile(spark, key, lambda: qs[key](spark, sf_dir).count())
 
 
-def _cpu_s(sc) -> float:
-    """Cumulative executor CPU seconds over all COMPLETE stages
-    (monitoring REST). Diff around a run to attribute CPU to it."""
-    import json as _json
-    import urllib.request
-
-    base = sc.uiWebUrl
-    if base is None:
-        return 0.0
-    stages = _json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-        )
-    )
-    return sum(s.get("executorCpuTime", 0) for s in stages) / 1e9
-
-
-def _leg(qs, key, sf_dir, spark, sc, best_of, with_cpu):
-    """best_of timed runs of one leg; returns (min wall, rows, min cpu).
+def _leg(qs, key, sf_dir, spark, best_of) -> dict:
+    """best_of timed runs of one leg: {"wall": min wall, "rows", "cpu":
+    min executor CPU, "spill": (memory, disk) spill bytes summed over
+    the runs}. CPU and spill are None when the UI is off.
 
     Wall and CPU floors are taken INDEPENDENTLY across the repeats:
     r7 measured identical back-to-back runs of an identical plan on
@@ -67,13 +56,9 @@ def _leg(qs, key, sf_dir, spark, sc, best_of, with_cpu):
     the floor of each metric is the closest observable to that
     metric's true cost.
     """
-    walls, cpus, rows = [], [], 0
+    profs = []
     for _ in range(best_of):
-        c0 = _cpu_s(sc) if with_cpu else 0.0
-        wall, rows = _run(qs, key, sf_dir, spark)
-        walls.append(wall)
-        if with_cpu:
-            cpus.append(_cpu_s(sc) - c0)
+        profs.append(_run(qs, key, sf_dir, spark))
         # GC between repeats, not only between legs/keys: a best-of-3
         # big leg otherwise accumulates 4 runs' shuffle dirs (~28 GB
         # each on the sf3 pair keys) in one JVM and dies on disk —
@@ -84,30 +69,83 @@ def _leg(qs, key, sf_dir, spark, sc, best_of, with_cpu):
             time.sleep(2)
         except Exception:
             pass
-    return min(walls), rows, (min(cpus) if cpus else 0.0)
-
-
-def _spill_bytes(sc) -> tuple[int, int]:
-    """(memoryBytesSpilled, diskBytesSpilled) summed over all COMPLETE
-    stages retained so far (monitoring REST API). Diff around a run to
-    attribute spill to it."""
-    import json as _json
-    import urllib.request
-
-    base = sc.uiWebUrl
-    if base is None:
-        return (0, 0)
-    apps = _json.load(urllib.request.urlopen(f"{base}/api/v1/applications"))
-    app_id = next(a["id"] for a in apps if a.get("id") == sc.applicationId)
-    stages = _json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete"
+    if profs[0].totals is None:
+        cpu = spill = None
+    else:
+        cpu = min(p.cpu_s for p in profs)
+        spill = tuple(
+            sum(p.totals[f] for p in profs)
+            for f in ("memoryBytesSpilled", "diskBytesSpilled")
         )
-    )
-    return (
-        sum(s.get("memoryBytesSpilled", 0) for s in stages),
-        sum(s.get("diskBytesSpilled", 0) for s in stages),
-    )
+    return {
+        "wall": min(p.wall_s for p in profs),
+        "rows": profs[-1].result,
+        "cpu": cpu,
+        "spill": spill,
+    }
+
+
+def _report(args, key: str, small: dict, big: dict) -> bool:
+    """Print one key's JSON line from its two legs ({"wall", "rows",
+    "cpu", "spill"}); return its flag."""
+    from tools.scale_ratios import COMPLEXITY_BOUNDS
+
+    bound = COMPLEXITY_BOUNDS.get(key, 1.0)
+    # identical charge rule to scale_ratios.py: an operator whose
+    # OUTPUT grows faster than the input is charged for its output
+    rows_growth = (big["rows"] / small["rows"]) if small["rows"] else 1.0
+    allowed = bound * max(args.factor, rows_growth)
+    ratio = big["wall"] / small["wall"] if small["wall"] else float("inf")
+    flag = ratio > allowed and big["wall"] >= 2.0
+    # With --cpu, the flag is adjudicated on whichever of the wall
+    # or executor-CPU (work) ratio is LOWER: r7 established that
+    # wall on this box mode-flips 1.4-3.6x for identical runs while
+    # rows/bytes stay constant, so a key whose WORK scales within
+    # bound is not super-linear no matter which mode the big leg
+    # drew. A key over bound on BOTH metrics still flags.
+    cpu_ratio = None
+    if args.cpu and small["cpu"] and big["cpu"]:
+        cpu_ratio = big["cpu"] / small["cpu"]
+        flag = flag and (cpu_ratio > allowed)
+    elif args.cpu:
+        # No CPU reading (UI unreachable) or a zero one: the gate
+        # silently falling back to wall-only is exactly how a
+        # load-band flag masquerades as a regression (ADVICE r7).
+        print(
+            f"WARNING: {key}: CPU adjudication SKIPPED "
+            f"(small_cpu={small['cpu']}, big_cpu={big['cpu']} — "
+            "flag is wall-only)",
+            file=sys.stderr,
+        )
+    rec = {
+        "key": key,
+        "small_sec": round(small["wall"], 1),
+        "big_sec": round(big["wall"], 1),
+        "ratio": round(ratio, 1),
+        "small_rows": small["rows"],
+        "big_rows": big["rows"],
+        "rows_growth": round(rows_growth, 2),
+        "bound": bound,
+        "allowed": round(allowed, 1),
+        "flag": flag,
+        "conf": ("prod" if args.prod else "default")
+        + ("".join(" " + c for c in args.conf)),
+        "factor": args.factor,
+    }
+    if args.fresh_legs:
+        rec["protocol"] = f"fresh-legs best-of-{args.best_of}"
+    if cpu_ratio is not None:
+        rec["small_cpu_s"] = round(small["cpu"], 1)
+        rec["big_cpu_s"] = round(big["cpu"], 1)
+        rec["cpu_ratio"] = round(cpu_ratio, 1)
+    if args.spill:
+        for leg, d in (("small", small), ("big", big)):
+            mem, disk = d["spill"] or (None, None)
+            rec[f"{leg}_spill_mem"] = mem
+            rec[f"{leg}_spill_disk"] = disk
+    print(json.dumps(rec))
+    sys.stdout.flush()
+    return flag
 
 
 def _fresh_legs_parent(args) -> None:
@@ -116,19 +154,16 @@ def _fresh_legs_parent(args) -> None:
     line; child stderr passes through for progress visibility."""
     import subprocess
 
-    from tools.scale_ratios import COMPLEXITY_BOUNDS
-
     def leg(key: str, sf_dir: str) -> dict:
         cmd = [
             sys.executable, __file__, "--_one-leg", sf_dir,
             "--best-of", str(args.best_of),
         ]
-        if args.prod:
-            cmd.append("--prod")
+        for flag in ("prod", "cpu", "spill"):
+            if getattr(args, flag):
+                cmd.append(f"--{flag}")
         for kv in args.conf:
             cmd += ["--conf", kv]
-        if args.cpu:
-            cmd.append("--cpu")
         if args.io_codec:
             cmd += ["--io-codec", args.io_codec]
         if args.shuffle_partitions:
@@ -146,46 +181,7 @@ def _fresh_legs_parent(args) -> None:
 
     any_flag = False
     for key in args.keys:
-        small = leg(key, args.small)
-        big = leg(key, args.big)
-        bound = COMPLEXITY_BOUNDS.get(key, 1.0)
-        rows_growth = (big["rows"] / small["rows"]) if small["rows"] else 1.0
-        allowed = bound * max(args.factor, rows_growth)
-        ratio = big["wall"] / small["wall"] if small["wall"] else float("inf")
-        flag = ratio > allowed and big["wall"] >= 2.0
-        cpu_ratio = None
-        if args.cpu and small["cpu"] > 0 and big["cpu"] > 0:
-            cpu_ratio = big["cpu"] / small["cpu"]
-            flag = flag and (cpu_ratio > allowed)
-        elif args.cpu:
-            print(
-                f"WARNING: {key}: CPU adjudication SKIPPED "
-                f"(small_cpu={small['cpu']:.1f}, big_cpu={big['cpu']:.1f})",
-                file=sys.stderr,
-            )
-        any_flag |= flag
-        rec = {
-            "key": key,
-            "small_sec": round(small["wall"], 1),
-            "big_sec": round(big["wall"], 1),
-            "ratio": round(ratio, 1),
-            "small_rows": small["rows"],
-            "big_rows": big["rows"],
-            "rows_growth": round(rows_growth, 2),
-            "bound": bound,
-            "allowed": round(allowed, 1),
-            "flag": flag,
-            "conf": ("prod" if args.prod else "default")
-            + ("".join(" " + c for c in args.conf)),
-            "factor": args.factor,
-            "protocol": f"fresh-legs best-of-{args.best_of}",
-        }
-        if cpu_ratio is not None:
-            rec["small_cpu_s"] = round(small["cpu"], 1)
-            rec["big_cpu_s"] = round(big["cpu"], 1)
-            rec["cpu_ratio"] = round(cpu_ratio, 1)
-        print(json.dumps(rec))
-        sys.stdout.flush()
+        any_flag |= _report(args, key, leg(key, args.small), leg(key, args.big))
     if args.gate and any_flag:
         raise SystemExit(1)
 
@@ -196,15 +192,12 @@ def main() -> None:
     ap.add_argument("--big", default="/root/repo/.scratch/sf1")
     ap.add_argument("--factor", type=float, default=10.0)
     ap.add_argument("--prod", action="store_true",
-                    help="production conf: pairBlockCeiling=2000 + "
-                         "bandBucketCap=256 (r7 — without the cap, r=1 "
-                         "banding's hot buckets filled 77 GB of shuffle "
-                         "disk at sf10)")
+                    help="apply tools/conf_matrix.PRODUCTION_CONF")
     ap.add_argument("--best-of", type=int, default=1)
     ap.add_argument("--gate", action="store_true",
                     help="exit non-zero if any key exceeds its allowed ratio")
     ap.add_argument("--spill", action="store_true",
-                    help="report per-run memory/disk spill bytes (REST)")
+                    help="report per-leg memory/disk spill bytes (REST)")
     ap.add_argument("--cpu", action="store_true",
                     help="also record per-leg executor-CPU floors and a "
                          "cpu_ratio (REST; implies spark.ui.enabled). "
@@ -259,16 +252,14 @@ def main() -> None:
         return
 
     from mediaplaycounts_spark.session import get_spark
-    from tools.scale_ratios import COMPLEXITY_BOUNDS
     import __spark_entry__ as entrymod
 
     extra_conf = {}
     if args.spill or args.cpu:
         extra_conf["spark.ui.enabled"] = "true"
         # REST stage metrics are bounded by retainedStages (default
-        # 1000); long multi-key sweeps evict completed stages and the
-        # cumulative-sum diff then goes negative/understated (ADVICE
-        # r7). Big keys run thousands of stages across best-of repeats.
+        # 1000): big keys run thousands of stages across best-of
+        # repeats, and a stage evicted before its run is read is lost.
         extra_conf["spark.ui.retainedStages"] = "100000"
     if args.io_codec:
         # must land in the session builder: the codec is read from the
@@ -280,15 +271,16 @@ def main() -> None:
         )
     spark = get_spark("paired-decade", extra_conf=extra_conf or None)
     if args.prod:
-        spark.conf.set("spark.mediaplaycounts.pairBlockCeiling", "2000")
-        spark.conf.set("spark.mediaplaycounts.bandBucketCap", "256")
+        from tools.conf_matrix import PRODUCTION_CONF
+
+        for k, v in PRODUCTION_CONF.items():
+            spark.conf.set(k, v)
     for kv in args.conf:
         k, _, v = kv.partition("=")
         if not v:
             raise SystemExit(f"--conf expects k=v, got {kv!r}")
         spark.conf.set(k, v)
     qs = entrymod.queries()
-    sc = spark.sparkContext
 
     if args._one_leg:
         # child mode (--fresh-legs): warm-up + best-of-N at ONE sf in
@@ -296,18 +288,13 @@ def main() -> None:
         # JVM shutdown)
         key = args.keys[0]
         _run(qs, key, args._one_leg, spark)  # warm-up at the leg's own SF
-        wall, rows, cpu = _leg(
-            qs, key, args._one_leg, spark, sc, args.best_of, args.cpu
-        )
-        print(json.dumps({"wall": wall, "rows": rows, "cpu": cpu}))
+        print(json.dumps(_leg(qs, key, args._one_leg, spark, args.best_of)))
         return
 
     any_flag = False
     for key in args.keys:
         _run(qs, key, args.small, spark)  # warm-up (JVM/JIT/code cache)
-        sp0 = _spill_bytes(sc) if args.spill else (0, 0)
-        small = _leg(qs, key, args.small, spark, sc, args.best_of, args.cpu)
-        sp1 = _spill_bytes(sc) if args.spill else (0, 0)
+        small = _leg(qs, key, args.small, spark, args.best_of)
         # GC between the legs too (not just between keys): the warm-up
         # + small-leg shuffle dirs (~12 GB on the triangle decade) are
         # otherwise still on disk when the big leg starts, and a big
@@ -321,62 +308,8 @@ def main() -> None:
             time.sleep(3)
         except Exception:
             pass
-        big = _leg(qs, key, args.big, spark, sc, args.best_of, args.cpu)
-        sp2 = _spill_bytes(sc) if args.spill else (0, 0)
-        bound = COMPLEXITY_BOUNDS.get(key, 1.0)
-        # identical charge rule to scale_ratios.py: an operator whose
-        # OUTPUT grows faster than the input is charged for its output
-        rows_growth = (big[1] / small[1]) if small[1] else 1.0
-        allowed = bound * max(args.factor, rows_growth)
-        ratio = big[0] / small[0] if small[0] else float("inf")
-        flag = ratio > allowed and big[0] >= 2.0
-        # With --cpu, the flag is adjudicated on whichever of the wall
-        # or executor-CPU (work) ratio is LOWER: r7 established that
-        # wall on this box mode-flips 1.4-3.6x for identical runs while
-        # rows/bytes stay constant, so a key whose WORK scales within
-        # bound is not super-linear no matter which mode the big leg
-        # drew. A key over bound on BOTH metrics still flags.
-        cpu_ratio = None
-        if args.cpu and small[2] > 0 and big[2] > 0:
-            cpu_ratio = big[2] / small[2]
-            flag = flag and (cpu_ratio > allowed)
-        elif args.cpu:
-            # A non-positive CPU delta means the REST cumulative sum went
-            # backwards (stage eviction) or the UI was unreachable; the
-            # gate silently falling back to wall-only is exactly how a
-            # load-band flag masquerades as a regression (ADVICE r7).
-            print(
-                f"WARNING: {key}: CPU adjudication SKIPPED "
-                f"(small_cpu={small[2]:.1f}, big_cpu={big[2]:.1f} — "
-                "non-positive delta; flag is wall-only)",
-                file=sys.stderr,
-            )
-        any_flag |= flag
-        rec = {
-            "key": key,
-            "small_sec": round(small[0], 1),
-            "big_sec": round(big[0], 1),
-            "ratio": round(ratio, 1),
-            "small_rows": small[1],
-            "big_rows": big[1],
-            "rows_growth": round(rows_growth, 2),
-            "bound": bound,
-            "allowed": round(allowed, 1),
-            "flag": flag,
-            "conf": ("prod" if args.prod else "default")
-            + ("".join(" " + c for c in args.conf)),
-            "factor": args.factor,
-        }
-        if cpu_ratio is not None:
-            rec["small_cpu_s"] = round(small[2], 1)
-            rec["big_cpu_s"] = round(big[2], 1)
-            rec["cpu_ratio"] = round(cpu_ratio, 1)
-        if args.spill:
-            rec["small_spill_mem"] = sp1[0] - sp0[0]
-            rec["small_spill_disk"] = sp1[1] - sp0[1]
-            rec["big_spill_mem"] = sp2[0] - sp1[0]
-            rec["big_spill_disk"] = sp2[1] - sp1[1]
-        print(json.dumps(rec))
+        big = _leg(qs, key, args.big, spark, args.best_of)
+        any_flag |= _report(args, key, small, big)
         # Force a JVM GC between keys: shuffle files are reaped by the
         # ContextCleaner only when their RDDs are collected, and a big
         # heap GCs rarely — a multi-key big-SF session otherwise
@@ -386,7 +319,6 @@ def main() -> None:
             spark._jvm.System.gc()
         except Exception:
             pass
-        sys.stdout.flush()
     if args.gate and any_flag:
         raise SystemExit(1)
 

@@ -19,8 +19,8 @@ the patterns that do not survive a 100x scale-up:
   its expected shuffle budget.
 
 Round-5 addition (VERDICT r4 next #2): ``--bytes`` EXECUTES every key
-and records its total shuffle WRITE bytes from the Spark monitoring
-REST API (stage metrics diffed around each key). The exchange-count
+and records its total shuffle WRITE bytes over the stages of its own
+job group (mediaplaycounts_spark.profile). The exchange-count
 gate cannot see a payload-width regression — e.g. a string key
 sneaking back into an exchange, the exact bug class r4 fixed in
 dedup_substring_spans — but the bytes gate can: each key is checked
@@ -43,7 +43,6 @@ import json
 import pathlib
 import re
 import sys
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
@@ -410,32 +409,8 @@ BYTES_RATIO = 1.5
 BYTES_SLACK = 64 * 1024
 
 
-def _rest_stages(sc) -> dict[int, int]:
-    """stageId -> shuffle write bytes for all COMPLETE stages retained
-    by the app status store (Spark monitoring REST API — stable public
-    surface, same numbers as the UI's Stages tab)."""
-    base = sc.uiWebUrl
-    apps = json.load(urllib.request.urlopen(f"{base}/api/v1/applications"))
-    # Select OUR application by id, never apps[0] (ADVICE r5): if the
-    # endpoint ever lists more than one app (or changes ordering), the
-    # stage diff would silently baseline against the wrong app.
-    own = sc.applicationId
-    matches = [a for a in apps if a.get("id") == own]
-    if not matches:
-        raise RuntimeError(
-            f"application {own!r} not in {base}/api/v1/applications "
-            f"(got {[a.get('id') for a in apps]})"
-        )
-    app_id = matches[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete"
-        )
-    )
-    return {s["stageId"]: s["shuffleWriteBytes"] for s in stages}
-
-
 def bytes_audit(args) -> None:
+    from mediaplaycounts_spark.profile import profile
     from mediaplaycounts_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -443,9 +418,8 @@ def bytes_audit(args) -> None:
         "shuffle-bytes-audit",
         extra_conf={
             # The REST metrics need the UI's status store; raise stage
-            # retention so a long sweep never evicts a key's own stages
-            # mid-diff (diffing uses only NEW ids, so old evictions are
-            # harmless, but a single key must not outrun the window).
+            # retention so a key's own stages are never evicted before
+            # its profile reads them.
             "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "20000",
         },
@@ -476,15 +450,18 @@ def bytes_audit(args) -> None:
     print("| key | shuffle write | baseline | verdict |")
     print("| --- | --- | --- | --- |")
     for key in keys:
-        before = _rest_stages(spark.sparkContext)
+        # The profiled region is the build plus the write, so keys with
+        # eager checkpoint_df work at construction time count it too.
         try:
-            df = qs[key](spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
+            prof = profile(
+                spark,
+                key,
+                lambda: qs[key](spark, args.sf).write.format("noop").mode("overwrite").save(),
+            )
         except Exception as exc:
             print(f"| `{key}` | - | - | not executable: {type(exc).__name__} |")
             continue
-        after = _rest_stages(spark.sparkContext)
-        wrote = sum(v for sid, v in after.items() if sid not in before)
+        wrote = prof.totals["shuffleWriteBytes"]
         measured[key] = wrote
         base = baseline.get(key)
         if base is None:
