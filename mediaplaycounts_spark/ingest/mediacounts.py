@@ -1,33 +1,27 @@
 """Mediacounts daily-dump ingest (REF LogProcessor, re-expressed Spark-first).
 
 The reference's daily cron job (REF LogProcessor::download/parse per
-SURVEY.md §3.1) downloads a bz2 TSV — one row per media asset path, 26
-columns — then loops over lines in Python: split, whitelist audio/video
-extensions, URL-decode the filename, compute
+SURVEY.md §3.1) downloads a bz2 TSV (one row per media asset path, 26
+columns) and loops over its lines in Python: split, whitelist
+audio/video extensions, URL-decode the filename, compute
 ``plays = transfers_original + transcoded_audio + transcoded_video``
-(cols 3/16/18), and inserts (file, date, count) rows into MySQL.
+(cols 3/16/18), and insert (file, date, count) rows into MySQL.
 
-Here the whole job is ONE declarative plan:
-
-- ``spark.read.csv`` with an explicit 26-column schema (Spark reads
-  ``.bz2`` natively and in parallel — bz2 is block-splittable, so a
-  single daily dump still fans out across executors);
-- PERMISSIVE mode with ``_corrupt_record`` so malformed lines are routed
-  to an error sink instead of killing the job (REF ErrorLog);
-- the filter/decode/sum as Catalyst expressions (whole-stage codegen —
-  no Python in the hot path);
-- an explicit groupBy (file, date) SUM: the dump is *usually* one row
-  per file but the pipeline must be correct under duplicates
-  (SURVEY.md §3.1 stage 5);
-- date derived from the dump filename (``mediacounts.YYYY-MM-DD.v00``),
-  exactly as the reference names its downloads.
+Here the job is one declarative plan. A text scan split across the
+cores feeds one malformed-line rule (:func:`read_raw`); malformed lines
+go to an error sink (REF ErrorLog), and both sinks read one narrow
+cached projection of the day (:func:`corrupt_records`). An explicit
+groupBy (file, date) SUM keeps it correct under duplicate rows
+(SURVEY.md §3.1 stage 5); the date comes from the dump filename
+(``mediacounts.YYYY-MM-DD.v00``), as the reference names its downloads.
 
 At 100 TB: each day is an independent partition; the only shuffle is the
 (file, date) aggregation, which is map-side-combined; the output is
 date-partitioned parquet so every downstream date-range query prunes.
 """
-
 from __future__ import annotations
+
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,92 +35,96 @@ MEDIA_EXTENSION_PATTERN = r"\.(" + "|".join(MEDIA_EXTENSIONS) + r")$"
 #: 26-column mediacounts TSV: base path, response bytes, total
 #: transfers, original transfers, 12 reserved, transcoded-audio,
 #: reserved, transcoded-video, 7 reserved/referer columns.
-_FIELDS: list[T.StructField] = (
-    [
-        T.StructField("base_path", T.StringType()),
-        T.StructField("total_response_bytes", T.LongType()),
-        T.StructField("total_transfers", T.LongType()),
-        T.StructField("transfers_original", T.LongType()),
-    ]
-    + [T.StructField(f"reserved_{i}", T.StringType()) for i in range(4, 16)]
-    + [
-        T.StructField("transfers_transcoded_audio", T.LongType()),
-        T.StructField("reserved_17", T.StringType()),
-        T.StructField("transfers_transcoded_video", T.LongType()),
-    ]
-    + [T.StructField(f"reserved_{i}", T.StringType()) for i in range(19, 26)]
-)
+_LONGS = {1: "total_response_bytes", 2: "total_transfers", 3: "transfers_original",
+          16: "transfers_transcoded_audio", 18: "transfers_transcoded_video"}
+_FIELDS = [
+    T.StructField(_LONGS[i], T.LongType()) if i in _LONGS
+    else T.StructField(f"reserved_{i}" if i else "base_path", T.StringType())
+    for i in range(26)
+]
 
-RAW_SCHEMA = T.StructType(_FIELDS + [T.StructField("_corrupt_record", T.StringType())])
+#: Per-file open cost of dump reads (Spark's default is 4 MB): an
+#: 830 KB bz2 day is read as 4 splits on 4 cores, not 1.
+_DUMP_OPEN_COST = str(128 << 10)
+_DUMP_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _dump_lines(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.text(path)`` with splits sized by the dump open cost.
+
+    No read option moves the open-cost floor, and on the caller's session
+    it would split every single-row-group parquet table too. So a child
+    session (one per caller session) plans the file relation, and the
+    scan comes back as a frame of ``spark``, with all its other confs.
+    """
+    child = _DUMP_SESSIONS.get(spark)
+    if child is None:
+        child = _DUMP_SESSIONS[spark] = spark.newSession()
+        child.conf.set("spark.sql.files.openCostInBytes", _DUMP_OPEN_COST)
+    plan = child.read.text(path)._jdf.logicalPlan()
+    jvm_ds = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(jvm_ds.ofRows(spark._jsparkSession, plan), spark)
 
 
 def read_raw(spark: SparkSession, path: str) -> DataFrame:
-    """Scan raw dump files (``.tsv`` or ``.tsv.bz2``; globs allowed).
+    """Scan dump files (``.tsv`` or ``.tsv.bz2``; globs allowed) into the
+    26 ``_FIELDS``, ``_corrupt_record`` and ``dump_date``.
 
-    PERMISSIVE + ``_corrupt_record``: malformed lines survive the scan
-    as raw text for the error sink instead of failing the day.
+    A line is malformed, and ``_corrupt_record`` holds it verbatim, iff
+    it does not split into exactly 26 tab fields, or a LONG field is
+    non-empty and not ``^[+-]?[0-9]+$`` within a long. As in Spark's
+    PERMISSIVE CSV reader, an empty field is null and a blank line is no
+    record; unlike it, ``"`` is an ordinary character. The rule reads the
+    whole line, so the verdict does not depend on the columns a plan needs.
     """
-    return (
-        spark.read.option("sep", "\t")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(RAW_SCHEMA)
-        .csv(path)
-        .withColumn(
-            "dump_date",
-            F.to_date(
-                F.regexp_extract(
-                    F.input_file_name(), r"mediacounts\.(\d{4}-\d{2}-\d{2})", 1
-                )
-            ),
-        )
+    lines = _dump_lines(spark, path).filter(F.col("value").rlike(r"[^\x00-\x20]"))
+    split = lines.select("value", F.split("value", "\t", -1).alias("f"))
+    cols, bad = [], F.size("f") != len(_FIELDS)
+    for i, field in enumerate(_FIELDS):
+        col = text = F.nullif(F.get("f", i), F.lit(""))
+        if i in _LONGS:
+            col = text.try_cast("long")
+            bad = bad | (text.isNotNull() & (~text.rlike("^[+-]?[0-9]+$") | col.isNull()))
+        cols.append(col.alias(field.name))
+    day = F.to_date(F.regexp_extract(F.input_file_name(), r"mediacounts\.(\d{4}-\d{2}-\d{2})", 1))
+    corrupt = F.when(bad, F.col("value")).alias("_corrupt_record")
+    return split.select(*cols, corrupt, day.alias("dump_date"))
+
+
+def _day(raw: DataFrame) -> DataFrame:
+    """The one projection both sinks read: the raw line if malformed, the
+    dump date, and for kept media rows the URL-decoded file name and
+    ``plays`` (REF LogProcessor::parse, with no Python in the path)."""
+    kept = F.col("_corrupt_record").isNull() & F.lower("base_path").rlike(MEDIA_EXTENSION_PATTERN)
+    plays = sum(F.coalesce(F.col(_LONGS[i]), F.lit(0)) for i in (3, 16, 18))
+    file = F.url_decode(F.regexp_extract("base_path", r"([^/]+)$", 1))
+    return raw.select(
+        "_corrupt_record", "dump_date",
+        F.when(kept, file).alias("file"), F.when(kept, plays.cast("long")).alias("plays"),
     )
 
 
 def corrupt_records(raw: DataFrame) -> DataFrame:
-    """Rows rejected by the schema (REF ErrorLog): raw line + dump date.
+    """Malformed lines (REF ErrorLog): ``raw_line`` + ``dump_date``.
 
-    Spark disallows queries that reference ONLY ``_corrupt_record``
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); the
-    documented workaround is caching the parsed scan first. The error
-    path is a tiny fraction of the data, and the cache is shared with
-    the happy path when both run in one job.
+    Caches the day's narrow projection, so a :func:`parse_raw` of the
+    same ``raw`` reads that cache instead of scanning the dump again.
     """
-    return raw.cache().filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line"), "dump_date"
-    )
+    day = _day(raw).cache().filter(F.col("_corrupt_record").isNotNull())
+    return day.select(F.col("_corrupt_record").alias("raw_line"), "dump_date")
 
 
 def parse_raw(raw: DataFrame) -> DataFrame:
-    """Media-extension whitelist + URL-decode + plays computation.
-
-    One codegen'd select/filter — the reference's per-line Python loop
-    (REF LogProcessor::parse) with zero Python in the data path.
-    """
-    filename = F.url_decode(F.regexp_extract(F.col("base_path"), r"([^/]+)$", 1))
-    plays = (
-        F.coalesce(F.col("transfers_original"), F.lit(0))
-        + F.coalesce(F.col("transfers_transcoded_audio"), F.lit(0))
-        + F.coalesce(F.col("transfers_transcoded_video"), F.lit(0))
-    )
-    return (
-        raw.filter(F.col("_corrupt_record").isNull())
-        .filter(F.lower(F.col("base_path")).rlike(MEDIA_EXTENSION_PATTERN))
-        .select(
-            filename.alias("file"),
-            F.col("dump_date").alias("date"),
-            plays.cast("long").alias("plays"),
-        )
-    )
+    """Kept media rows ``(file, date, plays)``: well-formed lines whose
+    path has a whitelisted extension."""
+    day = _day(raw).filter(F.col("file").isNotNull())
+    return day.select("file", F.col("dump_date").alias("date"), "plays")
 
 
 def daily_playcounts(spark: SparkSession, path: str) -> DataFrame:
-    """Full ingest plan: scan -> parse -> per-(file, date) SUM.
-
-    Returns the playcount fact rows ``(file, date, count)`` — the
-    reference's MySQL table (SURVEY.md §2.1), safe under duplicate
-    input rows.
-    """
+    """Full ingest plan: scan -> parse -> per-(file, date) SUM: the
+    playcount fact rows ``(file, date, count)``, the reference's MySQL
+    table (SURVEY.md §2.1), safe under duplicate input rows."""
     parsed = parse_raw(read_raw(spark, path))
     return parsed.groupBy("file", "date").agg(F.sum("plays").alias("count"))
 

@@ -171,8 +171,8 @@ _DUCK_CORRUPT = (
 )
 def sink_error_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt-record routing (REF ErrorLog): malformed dump lines are
-    captured verbatim by PERMISSIVE mode and routed to a side sink
-    instead of poisoning the day's load."""
+    captured verbatim by the ingest's malformed-line rule and routed to
+    a side sink instead of poisoning the day's load."""
     raw = read_raw(spark, CORRUPT_FILE)
     return corrupt_records(raw).select("raw_line")
 
@@ -1207,11 +1207,11 @@ _E2E_DAILY_SQL = f"""
         SELECT string_split(line, chr(9)) AS f, filename FROM lines
     ),
     clean AS (
-        -- Spark PERMISSIVE corrupt semantics over this schema: a row is
-        -- malformed iff it does not have exactly 26 fields or any LONG
+        -- The ingest's malformed-line rule (mediacounts.read_raw): a row
+        -- is malformed iff it does not have exactly 26 fields or any LONG
         -- column holds a non-numeric token (day 3's "oops"/truncated
         -- lines). Empty LONG fields would be null (not corrupt) on
-        -- Spark and negative numerics would parse — both diverge from
+        -- Spark and signed numerics would parse — both diverge from
         -- this ^[0-9]+$ guard, so the fixture must contain neither:
         -- pinned by test_e2e_daily_ingest.py::
         -- test_fixture_long_fields_never_diverge_spark_vs_oracle.
@@ -1287,10 +1287,10 @@ def pipeline_e2e_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     errs = str(SCRATCH / f"e2e_errlog_{uuid.uuid4().hex[:12]}")
 
     raw = read_raw(spark, ALL_DAYS_GLOB)
-    # corrupt_records caches the parsed scan; the happy path below reuses
-    # that SAME cache — one pass over the raw dumps feeds both routes
-    # (the ErrorLog pattern ingest/mediacounts.py::corrupt_records
-    # documents; at 100 TB a second raw scan is the whole day's I/O again).
+    # corrupt_records caches the day's narrow projection (raw line if
+    # malformed, date, file, plays); parse_raw below reads that SAME
+    # cache, so one pass over the raw dumps feeds both sinks (at 100 TB
+    # a second raw scan is the whole day's I/O again).
     corrupt_records(raw).write.mode("overwrite").json(errs)
 
     pc = parse_raw(raw).groupBy("file", "date").agg(F.sum("plays").alias("count"))

@@ -97,8 +97,8 @@ def get_spark(
             "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
             "spark.ui.enabled": "false",
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-            # Keep scans parallel even for few large files.
-            "spark.sql.files.maxPartitionBytes": "128m",
+            # File splits keep Spark's defaults; the 4 MB per-file open
+            # cost, not maxPartitionBytes, is what splits a small input.
         }
     )
     if extra_conf:

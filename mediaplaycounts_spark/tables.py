@@ -99,7 +99,7 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Guard EXPENSIVE PER-ROW COMPUTE against input under-splitting.
 
     A narrow pipeline inherits the scan's partitioning, and a scan's
-    split count is governed by file layout (``maxPartitionBytes``), not
+    split count is governed by file layout and the per-file open cost, not
     by how much work downstream expressions do per row. A 60 MB
     single-file corpus scans as ONE task, so shingle explosion / 128-way
     MinHash projections / per-row vector math serialize onto one core —

@@ -50,8 +50,8 @@ def test_series_shape_and_zero_fill(series):
 
 def test_corrupt_rows_never_reach_the_store(series):
     """'Truncated.webm' exists ONLY as day 3's truncated line; its whole
-    series must be zero — the end-to-end proof that PERMISSIVE corrupt
-    routing kept malformed lines out of the serving table."""
+    series must be zero — the end-to-end proof that corrupt routing kept
+    malformed lines out of the serving table."""
     rows, _, _ = series
     assert all(r["count"] == 0 for r in rows if r.file == "Truncated.webm")
     # ...while a clean file the corrupt day also contains DID land

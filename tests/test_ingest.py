@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from mediaplaycounts_spark.ingest import (
@@ -82,6 +83,131 @@ def test_idempotent_daily_overwrite(spark, tmp_path):
         (F.col("file") == "Concert.ogv") & (F.col("date") == F.lit("2024-01-01"))
     ).head()
     assert row["count"] == 574  # 287 * 2
+
+
+# ------------------------------------------------- malformed-line rule
+
+
+def _fields(name: str, **over: str) -> list[str]:
+    """A well-formed 26-field line for ``name`` with plays 3 + 4 + 5;
+    ``c<i>=value`` replaces field ``i``."""
+    f = [f"/wikipedia/commons/e/ed/{name}", "100", "12", "3"] + ["-"] * 12
+    f += ["4", "-", "5"] + ["-"] * 7
+    for k, v in over.items():
+        f[int(k[1:])] = v
+    return f
+
+
+#: case -> (field overrides or a field count, the line's plays, or None
+#: when it is malformed). Each verdict is that of Spark's PERMISSIVE CSV
+#: reader with the 26-column schema, except the three quote cases marked
+#: (*): the text route reads ``"`` literally, as the sink_error_log
+#: DuckDB oracle does, where the CSV reader treats it as a quote.
+EDGE_LINES: dict[str, tuple[dict | int, int | None]] = {
+    "well_formed": ({}, 12),
+    "25_fields": (25, None),
+    "27_fields": (27, None),
+    **{f"junk_in_{i}": ({f"c{i}": "x"}, None) for i in (1, 2, 3, 16, 18)},
+    "empty_summed_long": ({"c3": ""}, 9),
+    "empty_unsummed_long": ({"c2": ""}, 12),
+    "negative": ({"c3": "-4"}, 5),
+    "plus_sign": ({"c3": "+4"}, 13),
+    "leading_space": ({"c3": " 4"}, None),
+    "trailing_space": ({"c3": "4 "}, None),
+    "decimal": ({"c3": "4.0"}, None),
+    "long_max": ({"c1": "9223372036854775807"}, 12),
+    "long_overflow": ({"c1": "9223372036854775808"}, None),
+    "open_quote": ({"c4": '"abc'}, 12),  # (*) CSV: malformed
+    "quoted_string": ({"c4": '"abc"'}, 12),
+    "quoted_long": ({"c3": '"4"'}, None),  # (*) CSV: plays 13
+    "quoted_tab": ({"c4": '"a\tb"'}, None),  # (*) CSV: one field, plays 12
+}
+
+
+def _edge_line(case: str) -> str:
+    spec = EDGE_LINES[case][0]
+    if isinstance(spec, int):
+        f = _fields(f"{case}.ogg")
+        return "\t".join((f + ["-"])[:spec])
+    return "\t".join(_fields(f"{case}.ogg", **spec))
+
+
+@pytest.fixture(scope="module")
+def edge_verdicts(spark, tmp_path_factory):
+    path = tmp_path_factory.mktemp("edge") / "mediacounts.2024-01-05.v00.tsv"
+    path.write_text("".join(_edge_line(c) + "\n" for c in EDGE_LINES))
+    raw = read_raw(spark, str(path))
+    bad = {r.raw_line for r in corrupt_records(raw).collect()}
+    plays = {r.file: r.plays for r in parse_raw(raw).collect()}
+    return bad, plays
+
+
+@pytest.mark.parametrize("case", list(EDGE_LINES))
+def test_malformed_line_rule(edge_verdicts, case):
+    bad, plays = edge_verdicts
+    expected = EDGE_LINES[case][1]
+    assert (_edge_line(case) in bad) == (expected is None)
+    assert plays.get(f"{case}.ogg") == expected
+
+
+def test_verdicts_do_not_depend_on_selected_columns(spark, tmp_path):
+    """Junk in total_transfers, which the rollup never reads, marks its
+    line malformed whichever columns a consumer selects, and the error
+    sink and the rollup agree with and without the shared cache."""
+    lines = [
+        "\t".join(_fields("A.ogg")),
+        "\t".join(_fields("B.webm", c3="7")),
+        "\t".join(_fields("%41.ogg")),  # a second spelling of A.ogg
+        "\t".join(_fields("Junk.ogg", c2="oops")),
+        "\t".join(_fields("Short.ogg")[:9]),
+        "\t".join(_fields("Photo.jpg")),
+    ]
+    path = tmp_path / "mediacounts.2024-01-06.v00.tsv"
+    path.write_text("\n".join(lines) + "\n")
+    raw = read_raw(spark, str(path))
+    expected_bad, expected_rollup = set(lines[3:5]), {"A.ogg": 24, "B.webm": 16}
+
+    def rollup() -> dict[str, int]:
+        rows = parse_raw(raw).groupBy("file").agg(F.sum("plays").alias("n")).collect()
+        return {r.file: r.n for r in rows}
+
+    assert rollup() == expected_rollup  # no cache yet
+    corrupt = F.col("_corrupt_record")
+    for cols in (raw.columns, ["base_path"], ["dump_date"]):
+        sink = raw.filter(corrupt.isNotNull()).select(corrupt, *cols).collect()
+        assert {r._corrupt_record for r in sink} == expected_bad, cols
+        assert raw.filter(corrupt.isNull()).select(*cols).count() == 4, cols
+    assert {r.raw_line for r in corrupt_records(raw).collect()} == expected_bad
+    assert rollup() == expected_rollup  # read from the cache
+    assert raw.count() == len(lines)
+
+
+def test_bz2_day_is_scanned_in_splits(spark, tmp_path):
+    """A multi-block bz2 day under 4 MB, one task at Spark's default
+    open cost, is read by more than one task, yields exactly its lines,
+    and leaves the caller's session confs as they were."""
+    import bz2
+    import random
+
+    rng = random.Random(7)
+    lines, sums = [], {}
+    for _ in range(7800):  # ~1 MB of lines
+        name = f"File {rng.randrange(3000)}.ogg"
+        b, t, o, a, v = (str(rng.randrange(10**9)) for _ in range(5))
+        f = _fields(name.replace(" ", "%20"), c1=b, c2=t, c3=o, c16=a, c18=v)
+        lines.append("\t".join(f))
+        sums[name] = sums.get(name, 0) + int(o) + int(a) + int(v)
+    path = tmp_path / "mediacounts.2024-02-01.v00.tsv.bz2"
+    path.write_bytes(bz2.compress(("\n".join(lines) + "\n").encode(), compresslevel=1))
+    assert path.stat().st_size > 128 << 10, "the day must span several splits"
+    conf = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(conf)
+    raw = read_raw(spark, str(path))
+    assert raw.rdd.getNumPartitions() >= 2
+    assert raw.count() == len(lines)
+    rows = parse_raw(raw).groupBy("file").agg(F.sum("plays").alias("n")).collect()
+    assert {r.file: r.n for r in rows} == sums
+    assert spark.conf.get(conf) == before
 
 
 # ---------------------------------------------------------------- fetch

@@ -40,17 +40,19 @@ Exit nonzero on any HARD contract violation or unproven route.
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pandas as pd  # noqa: E402
 
 from tools.check_correctness import compare, duck_con  # noqa: E402
 
-CKPT_DIR = "/root/repo/.scratch/conf_matrix_ckpt"
+CKPT_DIR = os.path.join(REPO, ".scratch", "conf_matrix_ckpt")
 
 #: The production conf (BASELINE.md / SCALE.md), defined only here:
 #: ``paired_decade.py --prod`` and ``profile_key.py --prod`` apply it.

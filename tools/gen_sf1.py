@@ -53,7 +53,8 @@ Run:  python tools/gen_sf1.py [--out .scratch/sf1]   (~seconds, DuckDB)
         nest (r2xr7xtok), and the embedding rotation+mask layers a new
         per-replica mask on top of the old one, preserving all
         within-new-replica cosines by the same cancellation argument)
-Then: python tools/check_correctness.py --sf /root/repo/.scratch/sf1 <keys>
+Writes to <checkout>/.scratch/sf1 by default (``--out`` overrides).
+Then: python tools/check_correctness.py --sf .scratch/sf1 <keys>
       python tools/scale_ratios.py <sf0.1 log> <sf1 log> --factor 10
 """
 
@@ -110,7 +111,8 @@ def _tag_marker(con: duckdb.DuckDBPyConnection) -> str:
 def main() -> None:
     global SRC, REPLICAS
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.scratch/sf1")
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    ap.add_argument("--out", default=str(repo / ".scratch" / "sf1"))
     ap.add_argument("--src", default=SRC)
     ap.add_argument("--replicas", type=int, default=REPLICAS)
     args = ap.parse_args()

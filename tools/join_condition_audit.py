@@ -36,10 +36,12 @@ any flag is not in the documented allowlist.
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: Expression classes that must not appear inside a join condition.
 #: Lowercase substring match against the condition text.

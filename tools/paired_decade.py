@@ -27,10 +27,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mediaplaycounts_spark.profile import profile  # noqa: E402
 
@@ -170,7 +172,7 @@ def _fresh_legs_parent(args) -> None:
             cmd += ["--shuffle-partitions", str(args.shuffle_partitions)]
         cmd.append(key)
         out = subprocess.run(
-            cmd, capture_output=True, text=True, cwd="/root/repo"
+            cmd, capture_output=True, text=True, cwd=REPO
         )
         if out.returncode != 0:
             tail = "\n".join(out.stderr.splitlines()[-15:])
@@ -189,7 +191,7 @@ def _fresh_legs_parent(args) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small", default="/root/testdata/sf0.1")
-    ap.add_argument("--big", default="/root/repo/.scratch/sf1")
+    ap.add_argument("--big", default=os.path.join(REPO, ".scratch", "sf1"))
     ap.add_argument("--factor", type=float, default=10.0)
     ap.add_argument("--prod", action="store_true",
                     help="apply tools/conf_matrix.PRODUCTION_CONF")

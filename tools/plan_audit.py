@@ -42,9 +42,11 @@ import io
 import json
 import pathlib
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 #: Keys whose quadratic or Python-row-wise node is the documented point
 #: of the operator (tiny side / escape hatch), with the reason.

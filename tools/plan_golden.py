@@ -26,9 +26,11 @@ import io
 import json
 import pathlib
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 GOLDEN_PATH = pathlib.Path(__file__).resolve().parents[1] / "tests" / "golden_plans.json"
 
