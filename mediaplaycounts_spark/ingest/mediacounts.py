@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,24 +71,41 @@ def read_raw(spark: SparkSession, path: str) -> DataFrame:
     26 ``_FIELDS``, ``_corrupt_record`` and ``dump_date``.
 
     A line is malformed, and ``_corrupt_record`` holds it verbatim, iff
-    it does not split into exactly 26 tab fields, or a LONG field is
-    non-empty and not ``^[+-]?[0-9]+$`` within a long. As in Spark's
-    PERMISSIVE CSV reader, an empty field is null and a blank line is no
-    record; unlike it, ``"`` is an ordinary character. The rule reads the
-    whole line, so the verdict does not depend on the columns a plan needs.
+    it does not split into exactly 26 tab fields, a LONG field is
+    non-empty and not ``^[+-]?[0-9]+$`` within a long, its file name is
+    not valid percent-encoding, or its ``plays`` sum overflows a long.
+    As in Spark's PERMISSIVE CSV reader, an empty field is null and a
+    blank line is no record; unlike it, ``"`` is an ordinary character.
+    The rule reads the whole line, so the verdict does not depend on the
+    columns a plan needs, and one bad line never fails the day's job.
     """
     lines = _dump_lines(spark, path).filter(F.col("value").rlike(r"[^\x00-\x20]"))
     split = lines.select("value", F.split("value", "\t", -1).alias("f"))
-    cols, bad = [], F.size("f") != len(_FIELDS)
+    cols, bad = {}, F.size("f") != len(_FIELDS)
     for i, field in enumerate(_FIELDS):
         col = text = F.nullif(F.get("f", i), F.lit(""))
         if i in _LONGS:
             col = text.try_cast("long")
             bad = bad | (text.isNotNull() & (~text.rlike("^[+-]?[0-9]+$") | col.isNull()))
-        cols.append(col.alias(field.name))
+        cols[field.name] = col
+    bad = bad | _file(F.get("f", 0)).isNull() | _plays(cols.get).isNull()
     day = F.to_date(F.regexp_extract(F.input_file_name(), r"mediacounts\.(\d{4}-\d{2}-\d{2})", 1))
     corrupt = F.when(bad, F.col("value")).alias("_corrupt_record")
-    return split.select(*cols, corrupt, day.alias("dump_date"))
+    return split.select(*(c.alias(n) for n, c in cols.items()), corrupt, day.alias("dump_date"))
+
+
+def _file(base_path: Column) -> Column:
+    """URL-decoded last path segment; null if it does not decode. The
+    rule runs this on every line, so it cuts at the last ``/`` instead
+    of matching ``([^/]+)$``, a regex that retries at every offset."""
+    return F.try_url_decode(F.substring_index(base_path, "/", -1))
+
+
+def _plays(col) -> Column:
+    """Original + transcoded audio + transcoded video transfers (cols
+    3/16/18, empty = 0) from ``col(name)``; null if the sum overflows."""
+    a, b, c = (F.coalesce(col(_LONGS[i]), F.lit(0)) for i in (3, 16, 18))
+    return F.try_add(F.try_add(a, b), c)
 
 
 def _day(raw: DataFrame) -> DataFrame:
@@ -96,11 +113,10 @@ def _day(raw: DataFrame) -> DataFrame:
     dump date, and for kept media rows the URL-decoded file name and
     ``plays`` (REF LogProcessor::parse, with no Python in the path)."""
     kept = F.col("_corrupt_record").isNull() & F.lower("base_path").rlike(MEDIA_EXTENSION_PATTERN)
-    plays = sum(F.coalesce(F.col(_LONGS[i]), F.lit(0)) for i in (3, 16, 18))
-    file = F.url_decode(F.regexp_extract("base_path", r"([^/]+)$", 1))
     return raw.select(
         "_corrupt_record", "dump_date",
-        F.when(kept, file).alias("file"), F.when(kept, plays.cast("long")).alias("plays"),
+        F.when(kept, _file(F.col("base_path"))).alias("file"),
+        F.when(kept, _plays(F.col)).alias("plays"),
     )
 
 

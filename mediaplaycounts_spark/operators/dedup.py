@@ -212,7 +212,7 @@ BAND_BUCKET_CAP_CONF = "spark.mediaplaycounts.bandBucketCap"
 #: fired on the real corpus). The repair is now two-phase:
 #:
 #: 1. PEEL while any bucket's failed set exceeds
-#:    ``starRepairAllPairsCap`` (each round re-stars failures against
+#:    ``STAR_REPAIR_ALLPAIRS_CAP`` (each round re-stars failures against
 #:    the lowest failed co-member, removing >= the rep per bucket per
 #:    round — cheap, linear, and it peels a whole cohesive family per
 #:    round when one's member becomes rep);
@@ -223,16 +223,15 @@ BAND_BUCKET_CAP_CONF = "spark.mediaplaycounts.bandBucketCap"
 #:    unconditional by construction: any two cohesive residue members
 #:    get a DIRECT candidate).
 #:
-#: ``starRepairMaxRounds`` (default 64) now only bounds phase 1;
+#: ``STAR_REPAIR_MAX_ROUNDS`` (64) now only bounds phase 1;
 #: exhausting it with a still-over-cap residue RAISES naming the
 #: residue size — never a silent partial return, because silent loss
-#: is precisely what the repair exists to prevent. Both knobs are
-#: conf-overridable; cap=0 disables the tail (pure peel — the r11.0
-#: behavior, kept for the loud-failure tests).
+#: is precisely what the repair exists to prevent. Both are constants;
+#: the ``max_rounds``/``allpairs_cap`` parameters override them, and
+#: cap=0 disables the tail (pure peel — the r11.0 behavior, kept for
+#: the loud-failure tests).
 STAR_REPAIR_MAX_ROUNDS = 64
-STAR_REPAIR_MAX_ROUNDS_CONF = "spark.mediaplaycounts.starRepairMaxRounds"
 STAR_REPAIR_ALLPAIRS_CAP = 4096
-STAR_REPAIR_ALLPAIRS_CAP_CONF = "spark.mediaplaycounts.starRepairAllPairsCap"
 
 
 def _star_candidates_with_repair(
@@ -241,8 +240,8 @@ def _star_candidates_with_repair(
     keys: list[str],
     sets: DataFrame,
     threshold: float,
-    max_rounds: int | None = None,
-    allpairs_cap: int | None = None,
+    max_rounds: int = STAR_REPAIR_MAX_ROUNDS,
+    allpairs_cap: int = STAR_REPAIR_ALLPAIRS_CAP,
 ) -> DataFrame:
     """(id_a, id_b) star candidates for over-cap buckets, chain-repaired
     UNCONDITIONALLY (VERDICT r10 next #2): peel rounds shrink the
@@ -267,15 +266,15 @@ def _star_candidates_with_repair(
     excludes that round's per-bucket rep, so every bucket's failed
     count drops by >= 1 per round; the loop exits to the all-pairs
     tail the moment the LARGEST per-bucket residue fits
-    ``allpairs_cap`` (param, else the starRepairAllPairsCap conf,
-    else 4096) — with the default cap that is typically round 0, so
-    the common path is two Spark jobs total. ``max_rounds`` (param,
-    else the starRepairMaxRounds conf, else 64) bounds the peel
-    phase; exhausting it with a still-over-cap residue raises
-    ValueError naming the residue size — never a silent partial
-    return. The tail's candidate volume is <= C(allpairs_cap, 2) per
-    bucket of int-id pairs; stranger-stranger tail pairs simply fail
-    the caller's exact verify, so precision is untouched.
+    ``allpairs_cap`` (default ``STAR_REPAIR_ALLPAIRS_CAP`` = 4096) —
+    with the default cap that is typically round 0, so the common path
+    is two Spark jobs total. ``max_rounds`` (default
+    ``STAR_REPAIR_MAX_ROUNDS`` = 64) bounds the peel phase; exhausting
+    it with a still-over-cap residue raises ValueError naming the
+    residue size — never a silent partial return. The tail's
+    candidate volume is <= C(allpairs_cap, 2) per bucket of int-id
+    pairs; stranger-stranger tail pairs simply fail the caller's exact
+    verify, so precision is untouched.
 
     Scoring shape follows the r8 aging rule (:func:`_jaccard_verify`):
     the Jaccard lands above a groupBy barrier on the pair key, never
@@ -311,29 +310,6 @@ def _star_candidates_with_repair(
             .select(*keys, "id_b")
         )
 
-    if max_rounds is None:
-        try:
-            max_rounds = int(
-                bands.sparkSession.conf.get(
-                    STAR_REPAIR_MAX_ROUNDS_CONF, str(STAR_REPAIR_MAX_ROUNDS)
-                )
-            )
-        except ValueError as ex:
-            raise ValueError(
-                f"malformed {STAR_REPAIR_MAX_ROUNDS_CONF} conf: {ex}"
-            ) from ex
-    if allpairs_cap is None:
-        try:
-            allpairs_cap = int(
-                bands.sparkSession.conf.get(
-                    STAR_REPAIR_ALLPAIRS_CAP_CONF,
-                    str(STAR_REPAIR_ALLPAIRS_CAP),
-                )
-            )
-        except ValueError as ex:
-            raise ValueError(
-                f"malformed {STAR_REPAIR_ALLPAIRS_CAP_CONF} conf: {ex}"
-            ) from ex
     star = checkpoint_df(
         bands.join(buckets, keys)
         .filter(F.col("doc_id") != F.col("_rep"))
@@ -378,10 +354,9 @@ def _star_candidates_with_repair(
                 f"members still unconnected (max per-bucket residue {mx} "
                 f"> all-pairs tail cap {allpairs_cap}) — this bucket is "
                 "a pile of mutually-dissimilar docs whose minimum hashes "
-                f"collide; raise {STAR_REPAIR_ALLPAIRS_CAP_CONF} (pay "
-                "the bounded quadratic tail) or "
-                f"{STAR_REPAIR_MAX_ROUNDS_CONF}, or lower the band "
-                "bucket cap so the bucket routes to all-pairs upstream"
+                "collide; raise allpairs_cap (pay the bounded quadratic "
+                "tail) or max_rounds, or lower the band bucket cap so "
+                "the bucket routes to all-pairs upstream"
             )
         rounds_run += 1
         rep = failed.groupBy(*keys).agg(F.min("id_b").alias("_rep2"))
@@ -464,14 +439,14 @@ def minhash_lsh_pairs(
     the family lost all its links (1 of 5000 docs at sf0.1, cap=4).
     Repair re-stars each round's failed members against the lowest
     failed member of their bucket while any bucket's residue exceeds
-    starRepairAllPairsCap, then emits the exact within-bucket pairs of
-    the residue (unconditional as of r11 — VERDICT r10 next #2):
-    linear peel candidates plus a bounded quadratic tail, with a loud
-    ValueError at starRepairMaxRounds for a still-over-cap residue
-    instead of any silent partial return — so zero connectivity loss
-    is a hard guarantee, not a class-conditional one, at bounded Spark
-    job count; callers needing complete member-member
-    pairs keep the cap OFF — which is the default. Default OFF: the
+    STAR_REPAIR_ALLPAIRS_CAP (4096), then emits the exact within-bucket
+    pairs of the residue (unconditional as of r11 — VERDICT r10 next
+    #2): linear peel candidates plus a bounded quadratic tail, with a
+    loud ValueError after STAR_REPAIR_MAX_ROUNDS (64) peel rounds for a
+    still-over-cap residue instead of any silent partial return — so
+    zero connectivity loss is a hard guarantee, not a class-conditional
+    one, at bounded Spark job count; callers needing complete
+    member-member pairs keep the cap OFF — which is the default. Default OFF: the
     graded pairs contract (dedup_near_minhash) requires complete
     pairs; the cap is the production knob for boilerplate-heavy
     corpora, gated by tools/bench_skew.py --band. When off, the plan

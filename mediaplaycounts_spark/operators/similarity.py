@@ -96,6 +96,13 @@ PAIR_BLOCK_CEILING_CONF = "spark.mediaplaycounts.pairBlockCeiling"
 #: unaffected. 1M remains available by
 #: conf for callers who measured their blocks.
 _PAIR_BLOCK_CEILING_DEFAULT = 100_000
+#: Shape of the routed RH-LSH fallback of :func:`cosine_pairs_blocked`:
+#: 8 tables x 8 planes, probe Hamming <= 2, for a theoretical recall of
+#: 0.95 at the cos-0.3 grading point (formula and worst-case price in
+#: the operator docstring).
+COSINE_LSH_TABLES = 8
+COSINE_LSH_PLANES = 8
+COSINE_LSH_PROBE_HAMMING = 2
 
 
 def _resolve_block_ceiling(df: DataFrame, explicit: int | None) -> int:
@@ -182,11 +189,11 @@ def cosine_pairs_blocked(
     ``spark.mediaplaycounts.pairBlockCeiling``, else 100k rows — the
     unset default dropped from 1M in r11, VERDICT r10 next #3) switch
     to random-hyperplane LSH candidate generation — L independent
-    p-plane tables (``cosineLshTables``/``cosineLshPlanes`` confs,
-    default 8×8), MULTI-PROBED (VERDICT r9 #2, widened r10 next #1):
+    p-plane tables (``COSINE_LSH_TABLES`` × ``COSINE_LSH_PLANES`` =
+    8×8), MULTI-PROBED (VERDICT r9 #2, widened r10 next #1):
     the probe side of the bucket self-join carries the vector's own
-    bucket AND every flip of it up to ``cosineLshProbeHamming`` bits
-    (default 2), so a pair collides in a table when its buckets are
+    bucket AND every flip of it up to ``COSINE_LSH_PROBE_HAMMING`` = 2
+    bits, so a pair collides in a table when its buckets are
     within that Hamming distance, not only when they are equal. Same
     exact-cosine verify on every candidate, so precision stays 1.0;
     per-table collision for a pair at angle θ (q = 1-θ/π) is
@@ -204,8 +211,7 @@ def cosine_pairs_blocked(
     payload — while real clustered corpora (the routed regime) prune
     orders of magnitude; recall ≥0.9 at a cos-0.3 grading point is
     intrinsically expensive for hyperplane LSH (ρ = ln q / ln 0.5 ≈
-    0.74), and the knobs exist precisely so production picks its point
-    on that curve.
+    0.74); the module constants fix one point on that curve.
 
     PAYLOAD DISCIPLINE in the routed path (ADVICE r10): the exploded
     probe side and the dropDuplicates exchange carry (vid, blk, tbl,
@@ -318,7 +324,7 @@ def cosine_pairs_blocked(
             "any bucket — drop or impute them first)"
         )
     dim = int(dim_row["lo"])
-    n_tables, n_planes, probe_h = _resolve_lsh_conf(df)
+    n_tables, n_planes = COSINE_LSH_TABLES, COSINE_LSH_PLANES
     all_planes = lsh_planes(n_tables * n_planes, dim)
     tables = [
         all_planes[t * n_planes : (t + 1) * n_planes] for t in range(n_tables)
@@ -334,10 +340,11 @@ def cosine_pairs_blocked(
         "vid", "blk", F.posexplode(bucket_arr).alias("tbl", "bucket")
     ).hint("shuffle_hash")
     # Multi-probe expansion (docstring): X also probes every bucket
-    # within Hamming distance ``probe_h``; Y stays exact, so a pair
-    # (a<b) joins iff their table-t buckets differ in <=probe_h bits —
-    # symmetric, hence one-sided expansion suffices, and dropDuplicates
-    # below collapses the multi-table / multi-probe re-discoveries.
+    # within Hamming distance COSINE_LSH_PROBE_HAMMING; Y stays exact,
+    # so a pair (a<b) joins iff their table-t buckets differ in <= that
+    # many bits — symmetric, hence one-sided expansion suffices, and
+    # dropDuplicates below collapses the multi-table / multi-probe
+    # re-discoveries.
     bkx = bk.select(
         "vid",
         "blk",
@@ -346,7 +353,7 @@ def cosine_pairs_blocked(
             F.array(
                 *[
                     F.col("bucket").bitwiseXOR(F.lit(m))
-                    for m in _probe_masks(n_planes, probe_h)
+                    for m in _probe_masks(n_planes, COSINE_LSH_PROBE_HAMMING)
                 ]
             )
         ).alias("bucket"),
@@ -380,31 +387,6 @@ def cosine_pairs_blocked(
         "id_a", "id_b", F.round(cos, 6).alias("cos_sim")
     ).filter(F.col("cos_sim") >= threshold)
     return _exact_pairs(small_side).unionByName(big_pairs)
-
-
-#: Conf keys for the routed RH-LSH fallback of cosine_pairs_blocked.
-#: Defaults (8 tables x 8 planes, probe Hamming <= 2) put theoretical
-#: recall at the cos-0.3 grading point at 0.95 (see the operator
-#: docstring for the formula and the honest worst-case price).
-COSINE_LSH_TABLES_CONF = "spark.mediaplaycounts.cosineLshTables"
-COSINE_LSH_PLANES_CONF = "spark.mediaplaycounts.cosineLshPlanes"
-COSINE_LSH_PROBE_CONF = "spark.mediaplaycounts.cosineLshProbeHamming"
-
-
-def _resolve_lsh_conf(df: DataFrame) -> tuple[int, int, int]:
-    conf = df.sparkSession.conf
-    n_tables = int(conf.get(COSINE_LSH_TABLES_CONF, "8"))
-    n_planes = int(conf.get(COSINE_LSH_PLANES_CONF, "8"))
-    probe_h = int(conf.get(COSINE_LSH_PROBE_CONF, "2"))
-    if not (1 <= n_tables <= 64 and 2 <= n_planes <= 24):
-        raise ValueError(
-            f"cosine LSH conf out of range: tables={n_tables} planes={n_planes}"
-        )
-    if not (0 <= probe_h <= min(3, n_planes)):
-        raise ValueError(
-            f"cosineLshProbeHamming={probe_h} out of range [0, min(3, planes)]"
-        )
-    return n_tables, n_planes, probe_h
 
 
 def _probe_masks(n_planes: int, probe_h: int) -> list[int]:

@@ -260,41 +260,6 @@ def _is_narrow_over_leaves(df: DataFrame) -> bool:
     return True
 
 
-#: Conf key for the size gate used by :func:`maybe_broadcast`. When unset,
-#: the gate falls back to ``spark.sql.autoBroadcastJoinThreshold``.
-MAYBE_BROADCAST_CONF = "spark.mediaplaycounts.maybeBroadcastThreshold"
-
-
-def _parse_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf string ("10MB", "10485760b", "-1").
-
-    An unparseable value raises ValueError rather than silently falling
-    back to a default (ADVICE r4): a typo in
-    ``spark.mediaplaycounts.maybeBroadcastThreshold`` must surface as a
-    misconfiguration, not quietly re-enable 10MB broadcasting.
-    """
-    s = str(value).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("tb", 1 << 40), ("t", 1 << 40),
-        ("gb", 1 << 30), ("g", 1 << 30),
-        ("mb", 1 << 20), ("m", 1 << 20),
-        ("kb", 1 << 10), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        raise ValueError(
-            f"unparseable byte-size conf value {value!r} "
-            f"(expected forms like '10MB', '10485760b', '-1')"
-        ) from None
-
-
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's own sizeInBytes estimate for the OPTIMIZED plan of ``df``
     (post column-pruning / filter-pushdown) — the same statistic the
@@ -322,25 +287,17 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     unhinted so planning degrades to a shuffle join (SMJ/SHJ, with AQE
     free to re-promote at runtime if actual stats allow).
 
-    Gate: ``spark.mediaplaycounts.maybeBroadcastThreshold`` when set,
-    else ``spark.sql.autoBroadcastJoinThreshold``. A value <= 0 means
-    "never force" (Catalyst/AQE decide alone). Truly tiny dims
-    (nation/region/part, 1-row aggregates, date spines) should keep the
-    unconditional ``F.broadcast`` — they are broadcast-sized at ANY
-    scale factor and the gate would only add planning overhead.
+    Gate: ``spark.sql.autoBroadcastJoinThreshold``, the one size
+    threshold Catalyst's own broadcast decisions use, read already
+    parsed from the session's SQLConf (Spark rejects a malformed value
+    when it is set). A value <= 0 means "never force" (Catalyst/AQE
+    decide alone). Truly tiny dims (nation/region/part, 1-row
+    aggregates, date spines) should keep the unconditional
+    ``F.broadcast`` — they are broadcast-sized at ANY scale factor and
+    the gate would only add planning overhead.
     """
-    spark = df.sparkSession
-    raw = None
-    try:
-        raw = spark.conf.get(MAYBE_BROADCAST_CONF, None)
-    except Exception:
-        pass
-    if raw is None:
-        try:
-            raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        except Exception:
-            raw = "10MB"
-    threshold = _parse_bytes(raw)
+    sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = sql_conf.autoBroadcastJoinThreshold()
     if threshold <= 0:
         return df
     size = plan_size_bytes(df)

@@ -9,6 +9,8 @@ gates it; these tests pin the semantics.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +21,7 @@ from mediaplaycounts_spark.operators import dedup as D
 def boiler(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools.bench_skew import build_boilerplate_corpus
 
     docs, n_hot = build_boilerplate_corpus(spark, 400, 0.3)
@@ -170,23 +172,12 @@ def test_chain_repair_unconditional_stacked_families(spark):
 def test_chain_repair_round_ceiling_raises_loudly(spark):
     """With the all-pairs tail DISABLED (cap=0), exhausting the peel
     rounds RAISES naming the residue instead of silently returning
-    partial candidates — via params and via the two confs (all paths
-    live)."""
+    partial candidates."""
     bands, buckets, keys, sets, _ = _stacked_bucket(spark)
     with pytest.raises(ValueError, match="chain-repair exceeded"):
         D._star_candidates_with_repair(
             bands, buckets, keys, sets, 0.5, max_rounds=2, allpairs_cap=0
         ).collect()
-    spark.conf.set(D.STAR_REPAIR_MAX_ROUNDS_CONF, "2")
-    spark.conf.set(D.STAR_REPAIR_ALLPAIRS_CAP_CONF, "0")
-    try:
-        with pytest.raises(ValueError, match="chain-repair exceeded"):
-            D._star_candidates_with_repair(
-                bands, buckets, keys, sets, 0.5
-            ).collect()
-    finally:
-        spark.conf.unset(D.STAR_REPAIR_MAX_ROUNDS_CONF)
-        spark.conf.unset(D.STAR_REPAIR_ALLPAIRS_CAP_CONF)
 
 
 def test_chain_repair_peel_then_tail_path(spark):

@@ -15,11 +15,10 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
-
-REPO = "/root/repo"
 
 
 def _ref():

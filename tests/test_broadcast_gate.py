@@ -26,16 +26,13 @@ import io
 import re
 
 import pytest
+from pyspark.errors import IllegalArgumentException
 
 import __spark_entry__ as entrymod
-from mediaplaycounts_spark.tables import (
-    MAYBE_BROADCAST_CONF,
-    _parse_bytes,
-    maybe_broadcast,
-    plan_size_bytes,
-)
+from mediaplaycounts_spark.tables import maybe_broadcast, plan_size_bytes
 
 SF = "/root/testdata/sf0.001"
+AUTO_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 GATED_KEYS = [
     "join_star_multi_dim",
@@ -75,21 +72,6 @@ def _conf(spark, key, value):
             spark.conf.set(key, old)
 
 
-def test_parse_bytes_spark_conventions():
-    assert _parse_bytes("10MB") == 10 * 1024 * 1024
-    assert _parse_bytes("10485760b") == 10485760
-    assert _parse_bytes("-1") == -1
-    assert _parse_bytes("512k") == 512 * 1024
-
-
-def test_parse_bytes_rejects_garbage():
-    # ADVICE r4: a typo must surface, not silently re-enable 10MB.
-    with pytest.raises(ValueError, match="unparseable"):
-        _parse_bytes("10MBB")
-    with pytest.raises(ValueError, match="unparseable"):
-        _parse_bytes("lots")
-
-
 def test_maybe_broadcast_small_side_gets_hint(spark):
     df = spark.range(10)
     hinted = maybe_broadcast(df)
@@ -102,19 +84,25 @@ def test_maybe_broadcast_small_side_gets_hint(spark):
 
 def test_maybe_broadcast_withholds_hint_when_gate_closed(spark):
     df = spark.range(10)
-    with _conf(spark, MAYBE_BROADCAST_CONF, "0"):
-        assert maybe_broadcast(df) is df, "gate<=0 must never force a hint"
-    with _conf(spark, MAYBE_BROADCAST_CONF, "1b"):
+    for gate in ("-1", "0"):
+        with _conf(spark, AUTO_BROADCAST, gate):
+            assert maybe_broadcast(df) is df, "gate<=0 must never force a hint"
+    with _conf(spark, AUTO_BROADCAST, "1b"):
         assert maybe_broadcast(df) is df, "side larger than gate stays unhinted"
+    # ADVICE r4: a typo must surface, not silently re-enable 10MB.
+    with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
+        spark.conf.set(AUTO_BROADCAST, "lots")
+    assert maybe_broadcast(df) is not df
 
 
 def test_maybe_broadcast_falls_back_to_auto_threshold(spark):
+    """The gate is Spark's own threshold, inclusive at the plan size."""
     df = spark.range(10)
-    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-        assert maybe_broadcast(df) is df, (
-            "with auto-broadcast disabled and no explicit gate, the helper"
-            " must defer entirely to Catalyst"
-        )
+    size = plan_size_bytes(df)
+    with _conf(spark, AUTO_BROADCAST, f"{size}b"):
+        assert maybe_broadcast(df) is not df
+    with _conf(spark, AUTO_BROADCAST, f"{size - 1}b"):
+        assert maybe_broadcast(df) is df
 
 
 def test_plan_size_bytes_reflects_pruning(spark):

@@ -72,6 +72,25 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+# -------------------------------------------------------- knob census
+
+
+def test_library_reads_exactly_four_knobs():
+    """Every ``spark.mediaplaycounts.*`` name the library mentions is
+    one of the four routing/deployment knobs above: each knob doubles
+    the conf cells this file and tools/conf_matrix.py must cover, so a
+    new one has to be added here on purpose."""
+    from pathlib import Path
+
+    lib = Path(__file__).resolve().parents[1] / "mediaplaycounts_spark"
+    found = {
+        m
+        for f in lib.rglob("*.py")
+        for m in re.findall(r"spark\.mediaplaycounts\.[A-Za-z]+", f.read_text())
+    }
+    assert found == {CEILING, BANDCAP, CKDIR, MAXDF}
+
+
 # ------------------------------------------------------------- ceiling
 
 
@@ -221,24 +240,21 @@ def test_near_minhash_twin_conf_independent(spark, conf):
 
 
 def test_broadcast_gate_keys_invariant(spark, conf):
-    """maybeBroadcastThreshold is plan-only: closed gate + auto
-    broadcast off must keep every gated key value-identical while the
-    gated join demonstrably flips strategy."""
+    """The maybe_broadcast gate is plan-only: a closed gate
+    (autoBroadcastJoinThreshold=-1) must keep every gated key
+    value-identical while the gated join demonstrably flips strategy
+    against an open one (1g)."""
     from mediaplaycounts_spark.queries.joins import join_broadcast_dim
 
     def sparkplan(df):
         return df._jdf.queryExecution().sparkPlan().toString()
 
     default = _rows(join_broadcast_dim(spark, SF))
-    conf(**{
-        "spark.mediaplaycounts.maybeBroadcastThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    })
+    conf(**{"spark.sql.autoBroadcastJoinThreshold": "-1"})
     closed_df = join_broadcast_dim(spark, SF)
     n_closed = sparkplan(closed_df).count("BroadcastHashJoin")
     closed = _rows(closed_df)
-    spark.conf.set("spark.mediaplaycounts.maybeBroadcastThreshold", "1g")
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1g")
     open_df = join_broadcast_dim(spark, SF)
     n_open = sparkplan(open_df).count("BroadcastHashJoin")
     opened = _rows(open_df)

@@ -100,9 +100,11 @@ def _fields(name: str, **over: str) -> list[str]:
 
 #: case -> (field overrides or a field count, the line's plays, or None
 #: when it is malformed). Each verdict is that of Spark's PERMISSIVE CSV
-#: reader with the 26-column schema, except the three quote cases marked
-#: (*): the text route reads ``"`` literally, as the sink_error_log
-#: DuckDB oracle does, where the CSV reader treats it as a quote.
+#: reader with the 26-column schema, except the cases marked (*): the
+#: text route reads ``"`` literally, as the sink_error_log DuckDB oracle
+#: does, where the CSV reader treats it as a quote; and a file name that
+#: does not URL-decode or a ``plays`` sum past a long makes any line
+#: malformed, where the parse of a CSV-clean media line used to raise.
 EDGE_LINES: dict[str, tuple[dict | int, int | None]] = {
     "well_formed": ({}, 12),
     "25_fields": (25, None),
@@ -121,6 +123,10 @@ EDGE_LINES: dict[str, tuple[dict | int, int | None]] = {
     "quoted_string": ({"c4": '"abc"'}, 12),
     "quoted_long": ({"c3": '"4"'}, None),  # (*) CSV: plays 13
     "quoted_tab": ({"c4": '"a\tb"'}, None),  # (*) CSV: one field, plays 12
+    "bad_escape": ({"c0": "/w/a/ab/Bad%zz.ogg"}, None),  # (*) CSV: clean, parse raises
+    "bad_escape_not_media": ({"c0": "/w/a/ab/Bad%zz.jpg"}, None),  # (*) CSV: clean
+    "plays_long_max": ({"c3": "9223372036854775798"}, 9223372036854775807),
+    "plays_overflow": ({"c3": "9223372036854775799"}, None),  # (*) CSV: clean, parse raises
 }
 
 

@@ -440,16 +440,17 @@ def test_cosine_pairs_blocked_null_and_mixed_dim_vectors(spark):
 
 
 @pytest.mark.parametrize("probe_h", [1, 2])
-def test_cosine_fallback_multiprobe_candidate_model(spark, probe_h):
+def test_cosine_fallback_multiprobe_candidate_model(spark, monkeypatch, probe_h):
     """Multi-probe semantic pin (VERDICT r9 #2, widened r10 next #1):
     with threshold -1 the routed path's output IS its candidate set
     (every candidate passes a -1 cosine filter), which must equal the
     Hamming<=H model — pair (a,b) emitted iff some table t has buckets
-    within H bits, H = the cosineLshProbeHamming conf (default 2; the
-    H=1 leg proves the conf is LIVE, not just defaulted). Computes the
-    model driver-side from the SAME deterministic planes (lsh_planes
-    is md5-derived, engine-independent), so the test pins the JOIN
-    semantics, not the hashing."""
+    within H bits, H = ``COSINE_LSH_PROBE_HAMMING`` (the constant 2;
+    the H=1 leg patches it to prove the routed path reads it, not a
+    hard-coded 2). Computes the model driver-side from the SAME
+    deterministic planes (lsh_planes is md5-derived,
+    engine-independent), so the test pins the JOIN semantics, not the
+    hashing."""
     dim, n = 6, 30
     vecs = {
         i: [float(((i * 7 + j * 13) % 11) - 5) for j in range(dim)]
@@ -459,16 +460,13 @@ def test_cosine_fallback_multiprobe_candidate_model(spark, probe_h):
         [(i, "hot", v) for i, v in vecs.items()],
         "vec_id long, label string, embedding array<double>",
     )
-    spark.conf.set(S.COSINE_LSH_PROBE_CONF, str(probe_h))
-    try:
-        out = {
-            (r.id_a, r.id_b)
-            for r in S.cosine_pairs_blocked(
-                em, "vec_id", "embedding", "label", -1.0, block_ceiling=5
-            ).collect()
-        }
-    finally:
-        spark.conf.unset(S.COSINE_LSH_PROBE_CONF)
+    monkeypatch.setattr(S, "COSINE_LSH_PROBE_HAMMING", probe_h)
+    out = {
+        (r.id_a, r.id_b)
+        for r in S.cosine_pairs_blocked(
+            em, "vec_id", "embedding", "label", -1.0, block_ceiling=5
+        ).collect()
+    }
     n_tables, n_planes = 8, 8
     planes = S.lsh_planes(n_tables * n_planes, dim)
 
@@ -493,24 +491,3 @@ def test_cosine_fallback_multiprobe_candidate_model(spark, probe_h):
         # H=2 must be a strict widening on this fixture, or the
         # parametrization proves nothing.
         assert len(expected) > 0
-
-
-def test_cosine_lsh_conf_validation(spark):
-    """Out-of-range LSH confs raise instead of silently clamping."""
-    em = spark.createDataFrame(
-        [(i, "hot", [float(i), 1.0]) for i in range(20)],
-        "vec_id long, label string, embedding array<double>",
-    )
-    for key, bad in [
-        (S.COSINE_LSH_PROBE_CONF, "7"),
-        (S.COSINE_LSH_TABLES_CONF, "0"),
-        (S.COSINE_LSH_PLANES_CONF, "99"),
-    ]:
-        spark.conf.set(key, bad)
-        try:
-            with pytest.raises(ValueError, match="out of range"):
-                S.cosine_pairs_blocked(
-                    em, "vec_id", "embedding", "label", 0.5, block_ceiling=5
-                )
-        finally:
-            spark.conf.unset(key)

@@ -338,16 +338,13 @@ def prove_bandcap(spark, sf, qs, confs) -> tuple[bool, str]:
 
 
 def prove_broadcast(spark, sf, qs, confs) -> tuple[bool, str]:
-    off = {
-        "spark.mediaplaycounts.maybeBroadcastThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    on = {"spark.mediaplaycounts.maybeBroadcastThreshold": "1g"}
+    off = CELLS["broadcast_off"][0]
+    on = CELLS["broadcast_all"][0]
     # Differential, not absence: the key also joins truly-tiny dims with
     # UNCONDITIONAL F.broadcast (correct at any SF — see maybe_broadcast
     # docstring), so some BroadcastHashJoin survives a closed gate. The
     # proof is that the GATED join flips strategy: strictly more BHJs
-    # with the gate open than closed(+auto off).
+    # with the gate open than closed.
     with _with_conf(spark, off):
         p_off = _sparkplan(qs["join_broadcast_dim"](spark, sf))
     with _with_conf(spark, on):
@@ -357,10 +354,10 @@ def prove_broadcast(spark, sf, qs, confs) -> tuple[bool, str]:
     if n_on <= n_off:
         return False, (
             f"gate open did not add a BroadcastHashJoin "
-            f"(open={n_on}, closed+auto-off={n_off})"
+            f"(open={n_on}, closed={n_off})"
         )
     return True, (
-        f"gated join flips: {n_on} BHJs open vs {n_off} closed+auto-off "
+        f"gated join flips: {n_on} BHJs open vs {n_off} closed "
         "(residual BHJs are the unconditional tiny-dim hints)"
     )
 
@@ -421,15 +418,12 @@ CELLS = {
         prove_bandcap,
     ),
     "broadcast_off": (
-        {
-            "spark.mediaplaycounts.maybeBroadcastThreshold": "0",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
+        {"spark.sql.autoBroadcastJoinThreshold": "-1"},
         BROADCAST_KEYS,
         prove_broadcast,
     ),
     "broadcast_all": (
-        {"spark.mediaplaycounts.maybeBroadcastThreshold": "1g"},
+        {"spark.sql.autoBroadcastJoinThreshold": "1g"},
         BROADCAST_KEYS,
         prove_broadcast,
     ),
